@@ -8,16 +8,23 @@ they complete the "graph database capability" surface.
 
 Scale design:
 
+* Every iterative algorithm is one per-superstep plan run by the
+  :class:`Supersteps` driver, which owns the edge layout, the
+  checkpoints of superstep state and their release (also when a
+  superstep raises), and per-superstep timing.
 * Each iteration is one shuffle (join on vertex id) + one aggregation.
   Vertex state is narrow (id + a few scalars).
-* ``localCheckpoint`` every ``CHECKPOINT_EVERY`` iterations cuts the
-  lineage chain — without it the plan doubles per iteration and the
-  optimizer chokes long before 100 TB. On a cluster use
-  ``checkpoint`` (reliable) backed by HDFS/object storage.
+* Every superstep's state is checkpointed, which cuts the lineage chain
+  — without it the plan doubles per iteration and the optimizer chokes
+  long before 100 TB. On a cluster, ``GRAPHDB_SPARK_CHECKPOINT_DIR``
+  switches to reliable ``checkpoint`` backed by HDFS/object storage.
 * Convergence checks (``changed == 0``) are FUSED into the update
   projection: a ``__changed`` flag column computed where old and new
   state are both in scope, summed over the just-checkpointed frame —
   one narrow agg per iteration, never a new-state ⋈ old-state join.
+
+The measurements behind the layout and pinning choices are SCALE.md
+findings 30 and 34–36 (and the size tier in OPTIMIZATION_r14.md).
 
 Vertex ids are ``"Label:key"`` strings so the whole heterogeneous graph
 unions into one id space (same construction as the oracle SQL).
@@ -29,6 +36,7 @@ import os
 import threading
 import time
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -40,27 +48,20 @@ from project_graphdb_spark.spark_util import (
     unpersist_ids,
 )
 
-CHECKPOINT_EVERY = 5
-
-# Per-iteration wall-times of the most recent run of each iterative
-# algorithm, keyed by algorithm name. Because every superstep ends in an
-# eager localCheckpoint (and, when converging, an eager count), the loop
-# body boundaries ARE the superstep boundaries, so a perf_counter pair
-# per iteration is an accurate per-superstep timer. Driver-side
-# bookkeeping only — negligible cost, always on. The scale-bench tooling
-# (tools/run_iterative_bench.py) reads this to report how superstep cost
-# grows with data size.
+# Per-superstep wall-times of the most recent successful run of each
+# iterative algorithm, keyed by algorithm name. Every superstep ends in
+# an eager checkpoint (and, when converging, an eager count), so the
+# loop body boundaries ARE the superstep boundaries and a perf_counter
+# pair per superstep is an accurate timer. The scale-bench tooling
+# (tools/run_iterative_bench.py) and perfbench read this to report how
+# superstep cost grows with data size.
 LAST_ITER_SECONDS: dict[str, list[float]] = {}
-
-
-def _record_iter(name: str, seconds: list[float]) -> None:
-    LAST_ITER_SECONDS[name] = [round(s, 3) for s in seconds]
 
 
 def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
     """Eager localCheckpoint that also reports which block-manager RDD
     ids the checkpoint created, so the caller can free superseded
-    superstep state with :func:`_unpersist`.
+    superstep state.
 
     Why: ``localCheckpoint`` pins its blocks until the RDD is GC'd, and
     the Python-side DataFrame wrapper gives no handle on the underlying
@@ -103,48 +104,30 @@ def _ckpt(df: DataFrame) -> tuple[DataFrame, set[int]]:
         return out, persistent_rdd_ids(sc) - before
 
 
-def _unpersist(sc, ids: set[int]) -> None:
-    """Free the given block-manager RDD ids (non-blocking)."""
-    unpersist_ids(sc, ids, blocking=False)
+#: Below this edge-frame size the bucketed table write costs more than
+#: the per-iteration edge exchanges it removes, so the frame is
+#: checkpointed instead (measured at sf0.01 ≈ 1.3 MB vs sf0.1 ≈ 13 MB;
+#: 4 MB splits the two regimes). Tests force a layout by patching it.
+_EDGE_LAYOUT_MIN_BYTES = 4 * 1024 * 1024
 
-
-#: edge-frame layout for the rank-iteration family (pagerank /
-#: personalized_pagerank): "bucketed" (default since r11, MEASURED —
-#: SCALE.md finding 30) writes the edge frame ONCE as a src-bucketed
-#: sorted table so the per-iteration join reads a pre-partitioned,
-#: pre-sorted scan (zero edge-side exchange / sort in all N iterations
-#: — the Jacobi-iteration layout a 100 TB deployment would use);
-#: "checkpoint" keeps the r10 shape — the edge frame localCheckpoints
-#: once and every iteration's SMJ re-EXCHANGES it against fresh state.
-#: sf10 interleaved A/B, 3 reps each: totals 709/681/685 s (checkpoint)
-#: vs 739/369/459 s (bucketed), settled iterations ~7-10 s vs ~12-45 s.
-#: The env knob keeps both shapes runnable by the same harness.
-_EDGE_LAYOUT_ENV = "SPARK_GRAFT_PREGEL_EDGE_LAYOUT"
-_EDGE_BUCKETS = 32
-
-# Session-scoped bucketed-layout cache (r12, VERDICT r11 ask #4): the 8
-# galg_* queries each rebuilt (nearly) the same symmetrized edge table —
-# at 100 TB a sweep of the family paid N corpus-scale adjacency writes
-# where a graph-keyed shared layout does 1. The key is the edge frame's
-# ANALYZED-plan identity (Catalyst ``semanticHash`` bucket, confirmed by
-# ``sameResult`` — exprId-insensitive, so two independent constructions
-# of the same frame over the same files collide correctly), which
-# subsumes "(graph identity, symmetrized flag)": the directed and the
-# symmetrized views hash apart, two queries reading the same sf_dir hash
-# together. Contract: inputs are immutable for the session (true of the
-# parquet corpora everywhere in this repo); `release_edge_layouts` is
-# the explicit invalidation/cleanup hook — the persist/warehouse gates
-# and the long-running harnesses (bench, driver_sim, scale bench) call
-# it at end of run.
+# Session-scoped bucketed-layout cache: the galg_* family would
+# otherwise write (nearly) the same symmetrized edge table once per
+# algorithm. The key is the edge frame's ANALYZED-plan identity
+# (Catalyst ``semanticHash`` bucket, confirmed by ``sameResult`` —
+# exprId-insensitive, so two independent constructions of the same
+# frame over the same files collide) plus the bucket count. Contract:
+# inputs are immutable for the session (true of the parquet corpora
+# everywhere in this repo); `release_edge_layouts` is the explicit
+# invalidation/cleanup hook — the persist/warehouse gates and the
+# long-running harnesses (bench, driver_sim, scale bench) call it at
+# end of run.
 _EDGE_TABLE_LOCK = threading.Lock()
-_EDGE_TABLES: dict[str, dict[int, list]] = {}
-#: (writes, hits, ...) counters for the current process — the sweep's
-#: structural evidence that the family shares one adjacency write.
-#: ``unshareable_writes``/``per_run_drops`` (r13, VERDICT r12 ask #4)
-#: count layouts whose plans can never ``sameResult``-hit (LogicalRDD /
-#: checkpoint-derived) — those take the per-run DROP path instead of
-#: cache ownership, so a long session doesn't accumulate bucketed
-#: tables it can never reuse; a healthy sweep shows the two equal.
+_EDGE_TABLES: dict[str, dict[tuple[int, int], list]] = {}
+#: counters for the current process — the sweep's structural evidence
+#: that the family shares one adjacency write. ``unshareable_writes`` /
+#: ``per_run_drops`` count layouts whose plans can never ``sameResult``-
+#: hit (LogicalRDD / checkpoint-derived): those are dropped with their
+#: run instead of cached, so a healthy sweep shows the two equal.
 EDGE_LAYOUT_STATS = {
     "writes": 0,
     "hits": 0,
@@ -152,30 +135,15 @@ EDGE_LAYOUT_STATS = {
     "per_run_drops": 0,
     "tier_checkpoint_fallbacks": 0,
 }
-#: set to "off" to disable cross-invocation reuse (the r11 shape: one
-#: table write per algorithm run, dropped by the per-run cleanup) —
-#: the A/B harness knob
-_EDGE_CACHE_ENV = "SPARK_GRAFT_PREGEL_EDGE_CACHE"
 
-#: Size-adaptive layout tier (r14, VERDICT r13 ask #8): below this
-#: optimizer-estimated edge-frame size the bucketed table write costs
-#: more than the per-iteration exchanges it removes, so the DEFAULT
-#: falls back to checkpoint mode. The decision input is
-#: ``optimizedPlan().stats().sizeInBytes`` — metadata-only (file sizes
-#: for parquet-rooted plans, row-count × row-width for checkpointed
-#: pair graphs), measured ~0.04 s even at sf10. Regime sizes on this
-#: corpus: sf0.01 ≈ 1.3 MB, sf0.1 ≈ 13 MB, sf1 ≈ 139 MB,
-#: sf10 ≈ 1.5 GB. Default decided by the r14 cold-invocation A/Bs
-#: (measurements/r14/ab_edge_tier_sf{001,01}.json): at sf0.01 (1.3 MB)
-#: checkpoint wins every query (LP 16.0 s vs 27.6 s bucketed, CC 19.1
-#: vs 21.2, dedup_clusters 12.4 vs 14.3 medians); at sf0.1 (12.7 MB)
-#: bucketed is already flat-to-faster (CC 57.0 vs 51.3, LP/PR flat,
-#: dedup_clusters a wash inside its ±20% band) — so 4 MB splits the
-#: two measured regimes, and everything ≥ sf0.1 keeps the finding-30
-#: sf10-proven bucketed default. An explicit
-#: SPARK_GRAFT_PREGEL_EDGE_LAYOUT always bypasses the tier.
-_EDGE_TIER_ENV = "SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES"
-_EDGE_TIER_MIN_BYTES_DEFAULT = 4 * 1024 * 1024
+
+def _edge_buckets(spark) -> int:
+    """Bucket count of the edge layout and of the pinned state: the
+    session's shuffle-partition count. EnsureRequirements plans the
+    update join's state exchange at that count, so any other bucket
+    count makes the two state exchanges differ and ReuseExchange never
+    fires."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _edge_plan_size_bytes(edges: DataFrame) -> int:
@@ -191,7 +159,7 @@ def _edge_plan_size_bytes(edges: DataFrame) -> int:
     (a leaf referenced twice — the symmetrize union — counts twice,
     which is the right multiplicity). A LogicalRDD whose blocks are
     not in the registry falls back to the optimizer estimate
-    (conservative: over-estimates keep the pre-tier bucketed path)."""
+    (conservative: over-estimates keep the bucketed path)."""
     qe = edges._jdf.queryExecution()
     leaves = qe.analyzed().collectLeaves()
     rdd_leaf_ids = []
@@ -212,130 +180,102 @@ def _edge_plan_size_bytes(edges: DataFrame) -> int:
     return int(qe.optimizedPlan().stats().sizeInBytes())
 
 
-def _iteration_edges(edges: DataFrame, default: str = "bucketed"):
+def _iteration_edges(edges: DataFrame):
     """(edges_frame, cleanup_fn) for an N-iteration join loop.
 
-    checkpoint mode: eager localCheckpoint (cached blocks, but each
-    iteration pays an Exchange + Sort of the edge side into the SMJ).
-    bucketed mode: one bucketed+sorted table write; every iteration's
-    scan then reports HashPartitioning(src)/sorted-by-src, so only the
-    (much smaller) vertex-state side shuffles per iteration. The
-    repartition before the write aligns task boundaries with bucket
-    boundaries (same murmur3 hash), producing one file per bucket —
-    required for the scan to also satisfy the SMJ's sort order.
+    bucketed layout (edge frames of at least ``_EDGE_LAYOUT_MIN_BYTES``):
+    one src-bucketed, src-sorted table write; every iteration's scan
+    then reports HashPartitioning(src)/sorted-by-src, so only the (much
+    smaller) vertex-state side shuffles per iteration. The repartition
+    before the write aligns task boundaries with bucket boundaries
+    (same murmur3 hash), producing one file per bucket — required for
+    the scan to also satisfy the SMJ's sort order. Bucketed tables are
+    cached per (application, plan identity, bucket count) and reused
+    across algorithm invocations in the same session — the returned
+    cleanup is then a no-op and ownership passes to
+    :func:`release_edge_layouts`. A plan that can never hit the cache
+    (see :func:`_plan_shareable`) gets a cleanup that drops its table.
 
-    Bucketed tables are cached per (application, plan identity) and
-    reused across algorithm invocations in the same session — the
-    returned cleanup is then a no-op and ownership passes to
-    :func:`release_edge_layouts`. checkpoint-mode cleanup still frees
-    the blocks per run.
-
-    ``default`` is per-callsite (the env var, when set, overrides it
-    everywhere — that is what the A/B harness drives). Both callsites
-    default bucketed since r11, each on its OWN sf10 A/B (finding 30):
-    the fixed-10 rank family AND the convergence-driven ``pregel``
-    driver (whose shorter loops still amortize the one-time write —
-    CC 1338.5 -> 857.3 s).
-
-    r14 size tier (VERDICT r13 ask #8): when the mode comes from the
-    DEFAULT (no explicit env override) and the optimizer's edge-frame
-    size estimate is below ``SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES``, fall
-    back to checkpoint mode — at tiny scale the one-time bucketed
-    write costs more than every iteration it serves (dedup_clusters'
-    checkpoint-derived pair graphs were the motivating case). An
-    estimate FAILURE keeps bucketed (the pre-tier behavior)."""
-    mode = os.environ.get(_EDGE_LAYOUT_ENV)
-    if mode is None:
-        mode = default
-        if mode == "bucketed":
-            try:
-                min_bytes = int(
-                    os.environ.get(
-                        _EDGE_TIER_ENV, str(_EDGE_TIER_MIN_BYTES_DEFAULT)
-                    )
-                )
-                if _edge_plan_size_bytes(edges) < min_bytes:
-                    mode = "checkpoint"
-                    with _EDGE_TABLE_LOCK:
-                        EDGE_LAYOUT_STATS["tier_checkpoint_fallbacks"] += 1
-            except Exception:
-                pass
-    if mode != "bucketed":
+    checkpoint layout (smaller frames): eager localCheckpoint — cached
+    blocks, but each iteration pays an Exchange + Sort of the edge side
+    into the SMJ; the cleanup frees the blocks. The size comes from
+    :func:`_edge_plan_size_bytes`; when the JVM cannot estimate it the
+    frame keeps the bucketed layout."""
+    try:
+        small = _edge_plan_size_bytes(edges) < _EDGE_LAYOUT_MIN_BYTES
+    except Py4JError:
+        small = False
+    if small:
+        with _EDGE_TABLE_LOCK:
+            EDGE_LAYOUT_STATS["tier_checkpoint_fallbacks"] += 1
         e, ids = _ckpt(edges)
-
-        def cleanup(sc, _ids=ids):
-            _unpersist(sc, _ids)
-
-        return e, cleanup
-
-    import uuid
+        return e, lambda sc: unpersist_ids(sc, ids)
 
     spark = edges.sparkSession
-    caching = os.environ.get(_EDGE_CACHE_ENV, "on") != "off"
-    jplan = None
-    if caching:
-        jplan = edges._jdf.queryExecution().analyzed()
-        if not _plan_shareable(jplan):
-            # r13 (VERDICT r12 ask #4 / ADVICE): a LogicalRDD-rooted
-            # plan (checkpoint-derived pair graphs — dedup_clusters*)
-            # can NEVER sameResult-hit a later invocation, so cache
-            # ownership only accumulates dead corpus-scale tables
-            # until release; give these the per-run DROP cleanup.
-            caching = False
-            with _EDGE_TABLE_LOCK:
-                EDGE_LAYOUT_STATS["unshareable_writes"] += 1
-    if caching:
-        app = spark.sparkContext.applicationId
-        h = jplan.semanticHash()
+    buckets = _edge_buckets(spark)
+    jplan = edges._jdf.queryExecution().analyzed()
+    if not _plan_shareable(jplan):
+        name = _write_bucketed(edges, buckets)
         with _EDGE_TABLE_LOCK:
-            for cached_plan, name in _EDGE_TABLES.get(app, {}).get(h, []):
-                if cached_plan.sameResult(jplan):
-                    EDGE_LAYOUT_STATS["hits"] += 1
-                    return spark.table(name), _noop_cleanup
+            EDGE_LAYOUT_STATS["unshareable_writes"] += 1
+            EDGE_LAYOUT_STATS["writes"] += 1
+
+        def cleanup(sc):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            with _EDGE_TABLE_LOCK:
+                EDGE_LAYOUT_STATS["per_run_drops"] += 1
+
+        return spark.table(name), cleanup
+
+    app = spark.sparkContext.applicationId
+    key = (jplan.semanticHash(), buckets)
+    with _EDGE_TABLE_LOCK:
+        hit = _cached_layout(app, key, jplan)
+    if hit is not None:
+        return spark.table(hit), _noop_cleanup
+    name = _write_bucketed(edges, buckets)
+    # The write happens outside the lock on purpose (a corpus-scale
+    # write must not serialize unrelated plans), so a concurrent call
+    # with the same plan may have won the race meanwhile: the loser
+    # drops its duplicate and adopts the winner's table.
+    with _EDGE_TABLE_LOCK:
+        winner = _cached_layout(app, key, jplan)
+        if winner is None:
+            EDGE_LAYOUT_STATS["writes"] += 1
+            _EDGE_TABLES.setdefault(app, {}).setdefault(key, []).append(
+                (jplan, name)
+            )
+    if winner is not None:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        return spark.table(winner), _noop_cleanup
+    _track_table_dir(spark, name)
+    _register_atexit()
+    return spark.table(name), _noop_cleanup
+
+
+def _cached_layout(app: str, key: tuple[int, int], jplan) -> str | None:
+    """Name of the cached table whose plan ``sameResult``-matches
+    ``jplan`` (counted as a hit), or None. Caller holds the lock."""
+    for cached_plan, name in _EDGE_TABLES.get(app, {}).get(key, []):
+        if cached_plan.sameResult(jplan):
+            EDGE_LAYOUT_STATS["hits"] += 1
+            return name
+    return None
+
+
+def _write_bucketed(edges: DataFrame, buckets: int) -> str:
+    import uuid
 
     name = f"pregel_edges_{uuid.uuid4().hex[:12]}"
     (
-        edges.repartition(_EDGE_BUCKETS, "src")
-        .write.bucketBy(_EDGE_BUCKETS, "src")
+        edges.repartition(buckets, "src")
+        .write.bucketBy(buckets, "src")
         .sortBy("src")
         .mode("overwrite")
         .format("parquet")
         .saveAsTable(name)
     )
-    if not caching:
-        with _EDGE_TABLE_LOCK:
-            EDGE_LAYOUT_STATS["writes"] += 1
-
-        def cleanup(sc, _name=name, _spark=spark):
-            _spark.sql(f"DROP TABLE IF EXISTS {_name}")
-            with _EDGE_TABLE_LOCK:
-                EDGE_LAYOUT_STATS["per_run_drops"] += 1
-
-        return spark.table(name), cleanup
-    # Double-check under the lock before taking cache ownership (r13,
-    # ADVICE): a concurrent call with the same plan may have won the
-    # race while we wrote — the table write happens outside the lock
-    # on purpose (a corpus-scale write must not serialize unrelated
-    # plans), so the loser drops its duplicate and adopts the winner's.
-    with _EDGE_TABLE_LOCK:
-        app = spark.sparkContext.applicationId
-        for cached_plan, winner in _EDGE_TABLES.get(app, {}).get(h, []):
-            if cached_plan.sameResult(jplan):
-                EDGE_LAYOUT_STATS["hits"] += 1
-                dup = name
-                name = None
-                break
-        else:
-            EDGE_LAYOUT_STATS["writes"] += 1
-            _EDGE_TABLES.setdefault(app, {}).setdefault(h, []).append(
-                (jplan, name)
-            )
-    if name is None:
-        spark.sql(f"DROP TABLE IF EXISTS {dup}")
-        return spark.table(winner), _noop_cleanup
-    _track_table_dir(spark, name)
-    _register_atexit()
-    return spark.table(name), _noop_cleanup
+    return name
 
 
 def _plan_shareable(jplan) -> bool:
@@ -410,6 +350,75 @@ def release_edge_layouts(spark) -> None:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+class Supersteps:
+    """Driver of one iterative algorithm run: the algorithm writes only
+    its per-superstep plan, the driver owns everything around it.
+
+    ``with Supersteps(name, spark, edges) as run:``
+
+    * ``run.edges`` is the iteration layout of ``edges``
+      (:func:`_iteration_edges`); checkpoint-layout blocks or a
+      per-run table are released when the block exits, whichever way.
+    * ``run.checkpoint(df, slot)`` eagerly checkpoints ``df`` and holds
+      its blocks under ``slot``, freeing the blocks the slot held
+      before — the superseded state. Distinct slots keep several frames
+      alive at once (the per-level blocks a BFS union reads);
+      ``run.free(slot)`` releases one early.
+    * ``for i in run.supersteps(n)`` yields ``0..n-1`` and times each
+      superstep, including one left by ``break``.
+
+    On a clean exit the timings go to ``LAST_ITER_SECONDS[name]`` and
+    the blocks still held back the result, so they are handed to
+    :func:`linger_ids`. If a superstep raises, every held block is
+    freed before the exception propagates.
+    """
+
+    def __init__(self, name: str, spark, edges: DataFrame | None = None):
+        self.name = name
+        self.sc = spark.sparkContext
+        self.edges = edges
+        self._edge_cleanup = _noop_cleanup
+        self._held: dict[str, set[int]] = {}
+        self._secs: list[float] = []
+
+    def __enter__(self) -> Supersteps:
+        if self.edges is not None:
+            self.edges, self._edge_cleanup = _iteration_edges(self.edges)
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        held = set().union(*self._held.values())
+        self._held.clear()
+        try:
+            if exc_type is None:
+                LAST_ITER_SECONDS[self.name] = [
+                    round(s, 3) for s in self._secs
+                ]
+                linger_ids(self.sc, held)
+            else:
+                unpersist_ids(self.sc, held)
+        finally:
+            self._edge_cleanup(self.sc)
+
+    def checkpoint(self, df: DataFrame, slot: str) -> DataFrame:
+        out, ids = _ckpt(df)
+        superseded = self._held.get(slot, set())
+        self._held[slot] = ids
+        unpersist_ids(self.sc, superseded)
+        return out
+
+    def free(self, slot: str) -> None:
+        unpersist_ids(self.sc, self._held.pop(slot, set()))
+
+    def supersteps(self, n: int):
+        for i in range(n):
+            t0 = time.perf_counter()
+            try:
+                yield i
+            finally:
+                self._secs.append(time.perf_counter() - t0)
+
+
 def unified_vertices(graph: PropertyGraph) -> DataFrame:
     """(id) — all nodes in the 'Label:key' id space."""
     frames = []
@@ -471,46 +480,44 @@ def degrees(graph: PropertyGraph) -> DataFrame:
     )
 
 
-_PIN_STATE_ENV = "SPARK_GRAFT_PIN_STATE"
+def _pin_state(state: DataFrame) -> DataFrame:
+    """Hash-pin the superstep's vertex-state frame to the edge bucket
+    spec, so a state frame consumed by several joins moves once.
 
-
-def _pin_state(state: DataFrame, default: str = "on") -> DataFrame:
-    """Hash-pin the superstep's vertex-state frame to the bucket spec
-    (r13, VERDICT r12 ask #3 — kill the second per-superstep state
-    Exchange). Context: ``localCheckpoint`` does NOT carry
-    outputPartitioning through to the LogicalRDD under AQE in this
-    Spark (measured: a pre-checkpoint ``repartition(32, "id")`` still
-    re-exchanges, ``Scan ExistingRDD`` plans as UnknownPartitioning),
-    so every superstep must shuffle state at least once. But the state
-    frame feeds TWO joins per superstep — the message join against the
-    src-bucketed edge scan and the update join against the message
-    aggregate — and EnsureRequirements plans an Exchange under each.
-    Routing both consumers through ONE shared subtree — explicit
-    null-filter INSIDE it (an inner join pushes ``isnotnull`` into one
-    branch only, which de-canonicalizes the pair), then an explicit
-    ``repartition(_EDGE_BUCKETS, id)`` — makes the two exchanges
+    ``localCheckpoint`` does NOT carry outputPartitioning through to
+    the LogicalRDD under AQE in this Spark (``Scan ExistingRDD`` plans
+    as UnknownPartitioning), so every superstep shuffles state at least
+    once; without the pin EnsureRequirements plans one Exchange per
+    consumer. Routing every consumer through ONE shared subtree —
+    explicit null-filter INSIDE it (an inner join pushes ``isnotnull``
+    into one branch only, which de-canonicalizes the pair), then an
+    explicit ``repartition(buckets, id)`` — makes the exchanges
     canonically identical, so ReuseExchange plans one physical shuffle
-    + a ReusedExchange: state moves once per superstep, the floor.
-    REPARTITION_BY_NUM is exempt from AQE coalescing, so the 32
-    partitions stay co-partitioned with the 32-bucket edge layout and
-    the message join's edge side keeps its zero-exchange scan.
-    The null-filter is a no-op semantically: vertex ids are
-    ``concat_ws``-built (never null) in every caller.
+    plus ReusedExchanges. REPARTITION_BY_NUM is exempt from AQE
+    coalescing, so the partitions stay co-partitioned with the bucketed
+    edge layout. The null-filter is a no-op semantically: vertex ids
+    are ``concat_ws``-built (never null) in every caller.
 
-    ``default`` is per-callsite, decided by the r13 sf10 interleaved
-    A/B (SCALE.md finding 35; PR + CC, 2 reps/variant, fresh sessions,
-    per-iteration times): the RANK family (pagerank / PPR — state
-    referenced 3x per iteration) keeps "on" — iteration sums 215/381 s
-    unpinned vs 193/239 s pinned, totals −27% in both reps; the
-    generic ``pregel`` driver (state referenced 2x) keeps "off" —
-    CC iteration sums 394/310 s unpinned vs 430/350 s pinned and a
-    higher settled floor (26.5–27.7 vs 28.0–29.4 s), consistent in
-    sign across both reps. ``SPARK_GRAFT_PIN_STATE`` overrides both
-    callsites — the A/B knob, same convention as ``_EDGE_LAYOUT_ENV``."""
-    if os.environ.get(_PIN_STATE_ENV, default) == "off":
-        return state
+    Only the rank loop pins: its state has three consumers per
+    superstep and pinning measured faster there, while the
+    two-consumer pregel shape measured slower pinned (SCALE.md
+    finding 35)."""
     return state.filter(F.col("id").isNotNull()).repartition(
-        _EDGE_BUCKETS, "id"
+        _edge_buckets(state.sparkSession), "id"
+    )
+
+
+def send_messages(
+    state: DataFrame, edges: DataFrame, message: Column
+) -> DataFrame:
+    """Un-aggregated message pass: (id, __msg) per in-edge of each
+    destination. ``message`` sees edge columns + ``v_<state>``."""
+    src_state = state.select(
+        F.col("id").alias("__src_id"),
+        *[F.col(c).alias(f"v_{c}") for c in state.columns if c != "id"],
+    )
+    return edges.join(src_state, edges.src == F.col("__src_id")).select(
+        F.col("dst").alias("id"), message.alias("__msg")
     )
 
 
@@ -525,13 +532,8 @@ def aggregate_messages(
     algorithm below is built from — one shuffle (the join) plus one
     aggregation per superstep.
     """
-    src_state = state.select(
-        F.col("id").alias("__src_id"),
-        *[F.col(c).alias(f"v_{c}") for c in state.columns if c != "id"],
-    )
     return (
-        edges.join(src_state, edges.src == F.col("__src_id"))
-        .select(F.col("dst").alias("id"), message.alias("__msg"))
+        send_messages(state, edges, message)
         .groupBy("id")
         .agg(agg.alias("__agg"))
     )
@@ -558,78 +560,36 @@ def pregel(
     a vertex received no messages).
     ``converge_on``: state column — stop when no row changes it.
 
-    Each superstep localCheckpoints the state (lineage stays flat); the
+    Each superstep checkpoints the state (lineage stays flat); the
     convergence check is a fused ``__changed`` flag summed over the
     just-checkpointed frame (no extra join job).
     """
-    # the edge frame is re-read every superstep — materialize it once
-    # so the per-iteration cost is one join, not (scan+distinct)+join.
-    # Bucketed by default since r11: this driver got its OWN sf10 A/B
-    # (finding 30, CC row — convergence-driven loops still amortize
-    # the one-time table write: 1338.5 -> 857.3 s, −36%).
-    sc = vertices.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(edges)
-    state, state_ids = _ckpt(
-        vertices.select(
-            "id", *[col.alias(name) for name, col in initial.items()]
+    proj = ["id"] + [col.alias(name) for name, col in update.items()]
+    if converge_on is not None:
+        proj.append(
+            (~update[converge_on].eqNullSafe(F.col(converge_on)))
+            .cast("int")
+            .alias("__changed")
         )
-    )
-    iter_secs: list[float] = []
-    new_ids: set[int] = set()
-    try:
-        for _ in range(max_iter):
-            t0 = time.perf_counter()
-            # pin default OFF here: the r13 A/B (finding 35) measured
-            # the 2-reference pregel shape (CC) ~10% SLOWER pinned on
-            # iteration sums in both reps — only the 3-reference rank
-            # family wins; SPARK_GRAFT_PIN_STATE=on flips it for A/Bs
-            pinned = _pin_state(state, default="off")
-            msgs = aggregate_messages(pinned, edges, message, agg)
-            # the convergence flag is FUSED into the update projection
-            # — old and new values are both in scope here, so the
-            # per-round "did anything change" question costs one narrow
-            # column plus one agg over the frame we checkpoint anyway,
-            # instead of a separate new ⋈ old join job per superstep
-            proj = ["id"] + [
-                col.alias(name) for name, col in update.items()
-            ]
+    with Supersteps(telemetry_name, vertices.sparkSession, edges) as run:
+        state = run.checkpoint(
+            vertices.select(
+                "id", *[col.alias(name) for name, col in initial.items()]
+            ),
+            "state",
+        )
+        for _ in run.supersteps(max_iter):
+            msgs = aggregate_messages(state, run.edges, message, agg)
+            state = run.checkpoint(
+                state.join(msgs, "id", "left").select(*proj), "state"
+            )
             if converge_on is not None:
-                proj.append(
-                    (~update[converge_on].eqNullSafe(F.col(converge_on)))
-                    .cast("int")
-                    .alias("__changed")
-                )
-            updated = pinned.join(msgs, "id", "left").select(*proj)
-            updated, new_ids = _ckpt(updated)
-            changed = None
-            if converge_on is not None:
-                changed = updated.agg(
+                changed = state.agg(
                     F.coalesce(F.sum("__changed"), F.lit(0))
                 ).collect()[0][0]
-                updated = updated.drop("__changed")
-            # the old state is superseded the moment its successor is
-            # materialized (the fused flag already captured the diff)
-            _unpersist(sc, state_ids)
-            state, state_ids = updated, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-            if changed == 0:
-                break
-    except BaseException:
-        # a failed superstep (task failure past retries, OOM, ...)
-        # must not strand the last checkpointed state's blocks — nor
-        # the JUST-checkpointed successor's, when the failure lands
-        # between _ckpt(updated) and the state swap (e.g. the
-        # convergence-count job dies); unpersist is idempotent, so
-        # freeing both sets is safe whichever side of the swap we're on
-        _unpersist(sc, state_ids)
-        _unpersist(sc, new_ids)
-        raise
-    finally:
-        # checkpoint-mode edge blocks are freed success OR failure;
-        # bucketed-mode layouts are cache-owned (release_edge_layouts)
-        edge_cleanup(sc)
-    _record_iter(telemetry_name, iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
+                state = state.drop("__changed")
+                if changed == 0:
+                    break
     return state
 
 
@@ -697,82 +657,64 @@ def k_core(
     degrees. An edge between vertices removed in different rounds is
     counted exactly once against each still-surviving endpoint, so the
     running ``deg`` always equals the degree in the current core
-    subgraph — the earlier formulation recounted ALL surviving degrees
-    from the full symmetric frame every round (one full-E shuffle + an
-    E-sized checkpoint per round; measured 3.4x at 10x data, the
-    recount dominating late near-empty rounds). Convergence = empty
-    frontier, a count on the vertex frame. A self-loop counts 1 toward
-    its vertex's degree (as in the symmetric-distinct formulation,
-    which kept exactly one ``u->u`` row).
+    subgraph — recounting ALL surviving degrees from the full
+    symmetric frame every round costs one full-E shuffle + an E-sized
+    checkpoint per round (measured 3.4x at 10x data, the recount
+    dominating late near-empty rounds). Convergence = empty frontier, a
+    count on the vertex frame. A self-loop counts 1 toward its vertex's
+    degree (as in the symmetric-distinct formulation, which kept
+    exactly one ``u->u`` row).
     """
     if graph is not None:
         directed = unified_edges(graph)
     else:
         assert edges is not None
         directed = edges.select("src", "dst").distinct()
-    sc = directed.sparkSession.sparkContext
-    canon, canon_ids = _ckpt(
-        directed.select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        ).distinct()
-    )
-    ends = canon.select(F.col("a").alias("id")).unionAll(
-        canon.filter(F.col("a") != F.col("b")).select(
-            F.col("b").alias("id")
+    with Supersteps("k_core", directed.sparkSession) as run:
+        canon = run.checkpoint(
+            directed.select(
+                F.least("src", "dst").alias("a"),
+                F.greatest("src", "dst").alias("b"),
+            ).distinct(),
+            "canon",
         )
-    )
-    deg, deg_ids = _ckpt(
-        ends.groupBy("id").agg(F.count("*").alias("deg"))
-    )
-    iter_secs: list[float] = []
-    for _ in range(max_iter):
-        t0 = time.perf_counter()
-        removed = deg.filter(F.col("deg") < k)
-        n_removed = removed.count()
-        if n_removed == 0:
-            iter_secs.append(time.perf_counter() - t0)
-            break
-        nbr = canon.join(
-            removed.select(F.col("id").alias("a")), "a", "left_semi"
-        ).select(F.col("b").alias("id")).unionAll(
-            canon.join(
-                removed.select(F.col("id").alias("b")), "b", "left_semi"
-            ).select(F.col("a").alias("id"))
+        ends = canon.select(F.col("a").alias("id")).unionAll(
+            canon.filter(F.col("a") != F.col("b")).select(
+                F.col("b").alias("id")
+            )
         )
-        delta = nbr.groupBy("id").agg(F.count("*").alias("__delta"))
-        survivors = deg.filter(F.col("deg") >= k)
-        new_deg = survivors.join(delta, "id", "left").select(
-            "id",
-            (F.col("deg") - F.coalesce("__delta", F.lit(0))).alias("deg"),
+        deg = run.checkpoint(
+            ends.groupBy("id").agg(F.count("*").alias("deg")), "deg"
         )
-        new_deg, new_ids = _ckpt(new_deg)
-        _unpersist(sc, deg_ids)
-        deg, deg_ids = new_deg, new_ids
-        iter_secs.append(time.perf_counter() - t0)
-    out = deg.select(
-        "id", F.col("deg").cast("bigint").alias("core_degree")
-    )
-    out, out_ids = _ckpt(out)
-    linger_ids(sc, out_ids)  # result frame owns these blocks
-    _unpersist(sc, deg_ids)
-    _unpersist(sc, canon_ids)
-    _record_iter("k_core", iter_secs)
+        for _ in run.supersteps(max_iter):
+            removed = deg.filter(F.col("deg") < k)
+            if removed.count() == 0:
+                break
+            nbr = canon.join(
+                removed.select(F.col("id").alias("a")), "a", "left_semi"
+            ).select(F.col("b").alias("id")).unionAll(
+                canon.join(
+                    removed.select(F.col("id").alias("b")), "b", "left_semi"
+                ).select(F.col("a").alias("id"))
+            )
+            delta = nbr.groupBy("id").agg(F.count("*").alias("__delta"))
+            survivors = deg.filter(F.col("deg") >= k)
+            deg = run.checkpoint(
+                survivors.join(delta, "id", "left").select(
+                    "id",
+                    (F.col("deg") - F.coalesce("__delta", F.lit(0))).alias(
+                        "deg"
+                    ),
+                ),
+                "deg",
+            )
+        out = run.checkpoint(
+            deg.select("id", F.col("deg").cast("bigint").alias("core_degree")),
+            "out",
+        )
+        run.free("deg")
+        run.free("canon")
     return out
-
-
-def send_messages(
-    state: DataFrame, edges: DataFrame, message: Column
-) -> DataFrame:
-    """Un-aggregated message pass: (id, __msg) per in-edge of each
-    destination. ``message`` sees edge columns + ``v_<state>``."""
-    src_state = state.select(
-        F.col("id").alias("__src_id"),
-        *[F.col(c).alias(f"v_{c}") for c in state.columns if c != "id"],
-    )
-    return edges.join(src_state, edges.src == F.col("__src_id")).select(
-        F.col("dst").alias("id"), message.alias("__msg")
-    )
 
 
 def label_propagation(
@@ -791,53 +733,31 @@ def label_propagation(
         vertices = unified_vertices(graph)
         edges = unified_edges(graph, undirected=True)
     assert vertices is not None and edges is not None
-    sc = vertices.sparkSession.sparkContext
-    # r13: bucketed layout + shared layout cache, same as the pregel /
-    # pagerank drivers — LP was the last iteration loop still paying an
-    # edge-side Exchange + Sort per superstep (and, when a graph's
-    # symmetrized view is already cached by connected_components in the
-    # same session, the layout is free). sf10 A/B in SCALE.md.
-    edges, edge_cleanup = _iteration_edges(edges)
-
-    state, state_ids = _ckpt(
-        vertices.select("id", F.col("id").alias("community"))
-    )
-    iter_secs: list[float] = []
-    try:
-        for _ in range(max_iter):
-            t0 = time.perf_counter()
-            # pin default OFF — LP shares the 2-reference pregel shape
-            # the finding-35 A/B measured slower pinned (see pregel)
-            pinned = _pin_state(state, default="off")
+    w = W.partitionBy("id").orderBy(F.desc("__n"), F.asc("__msg"))
+    with Supersteps("label_propagation", vertices.sparkSession, edges) as run:
+        state = run.checkpoint(
+            vertices.select("id", F.col("id").alias("community")), "state"
+        )
+        for _ in run.supersteps(max_iter):
             counts = (
-                send_messages(pinned, edges, F.col("v_community"))
+                send_messages(state, run.edges, F.col("v_community"))
                 .groupBy("id", "__msg")
                 .agg(F.count("*").alias("__n"))
             )
-            w = W.partitionBy("id").orderBy(F.desc("__n"), F.asc("__msg"))
             best = (
                 counts.withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
                 .select("id", F.col("__msg").alias("__agg"))
             )
-            updated, new_ids = _ckpt(
-                pinned.join(best, "id", "left").select(
+            state = run.checkpoint(
+                state.join(best, "id", "left").select(
                     "id",
                     F.coalesce(F.col("__agg"), F.col("community")).alias(
                         "community"
                     ),
-                )
+                ),
+                "state",
             )
-            _unpersist(sc, state_ids)
-            state, state_ids = updated, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-    except BaseException:
-        _unpersist(sc, state_ids)
-        raise
-    finally:
-        edge_cleanup(sc)
-    _record_iter("label_propagation", iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
     return state
 
 
@@ -904,30 +824,34 @@ def triangle_count(
     )
 
 
-def pagerank(
-    graph: PropertyGraph,
-    iterations: int = 10,
-    damping: float = 0.85,
+def _rank_loop(
+    name: str,
+    vertices: DataFrame,
+    edges: DataFrame,
+    teleport: Column,
+    iterations: int,
+    damping: float,
 ) -> DataFrame:
-    """(id, rank) — classic power iteration with dangling-mass
-    redistribution, fixed iteration count (deterministic plan shape)."""
-    vertices = unified_vertices(graph)
-    sc = vertices.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(unified_edges(graph))
-    n = vertices.count()
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_degree")
-    )
-    state = vertices.join(out_deg, "id", "left").na.fill(0, ["out_degree"])
-    state, state_ids = _ckpt(state.withColumn("rank", F.lit(1.0 / n)))
-
-    iter_secs: list[float] = []
-    try:
-        for i in range(iterations):
-            t0 = time.perf_counter()
-            # shared pinned subtree: contribs join, dangling agg, and
-            # the update join all consume ONE physical state exchange
-            # (ReuseExchange) — see _pin_state
+    """(id, rank) — power iteration with restart: each superstep every
+    vertex passes ``damping`` of its rank along its out-edges, and the
+    rest — plus ``damping`` of the mass parked on dangling vertices —
+    restarts at the ``teleport`` distribution (a per-vertex column over
+    ``id`` that sums to 1, which is also the starting rank). Fixed
+    iteration count keeps the plan deterministic."""
+    with Supersteps(name, vertices.sparkSession, edges) as run:
+        edges = run.edges
+        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("out_degree")
+        )
+        state = run.checkpoint(
+            vertices.join(out_deg, "id", "left")
+            .na.fill(0, ["out_degree"])
+            .withColumn("rank", teleport),
+            "state",
+        )
+        for _ in run.supersteps(iterations):
+            # contribs join, dangling agg and the update join all
+            # consume ONE physical state exchange — see _pin_state
             pinned = _pin_state(state)
             contribs = (
                 edges.join(pinned, edges.src == pinned.id)
@@ -937,45 +861,51 @@ def pagerank(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum("c").alias("received"))
             )
-            # Dangling vertices donate their rank uniformly. Kept as a
-            # one-row DataFrame broadcast-cross-joined into the update
-            # (not .collect()ed) so the whole iteration stays one lazy
-            # plan that fuses with the checkpoint cadence — no extra
-            # driver job per iteration.
+            # a one-row frame broadcast-cross-joined into the update
+            # (not .collect()ed), so the superstep stays one lazy plan
+            # with no extra driver job
             dangling = pinned.filter(F.col("out_degree") == 0).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling_m")
             )
-            new_state = (
+            # the state is referenced twice (dangling subtree + update),
+            # so un-checkpointed lineage would double per superstep
+            state = run.checkpoint(
                 pinned.drop("rank")
                 .join(contribs, "id", "left")
                 .crossJoin(F.broadcast(dangling))
                 .withColumn(
                     "rank",
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * F.col("__dangling_m")
-                    / F.lit(float(n))
+                    teleport
+                    * (
+                        F.lit(1.0 - damping)
+                        + F.lit(damping) * F.col("__dangling_m")
+                    )
                     + F.lit(damping)
                     * F.coalesce(F.col("received"), F.lit(0.0)),
                 )
-                .drop("received", "__dangling_m")
+                .drop("received", "__dangling_m"),
+                "state",
             )
-            # Unlike the Pregel loop, each iteration references `state`
-            # twice (dangling-mass subtree + the main update), so
-            # un-checkpointed lineage doubles per iteration —
-            # checkpoint every step.
-            new_state, new_ids = _ckpt(new_state)
-            _unpersist(sc, state_ids)
-            state, state_ids = new_state, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-    except BaseException:
-        _unpersist(sc, state_ids)
-        raise
-    finally:
-        edge_cleanup(sc)
-    _record_iter("pagerank", iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
     return state.select("id", "rank")
+
+
+def pagerank(
+    graph: PropertyGraph,
+    iterations: int = 10,
+    damping: float = 0.85,
+) -> DataFrame:
+    """(id, rank) — classic power iteration with dangling-mass
+    redistribution, fixed iteration count (deterministic plan shape):
+    the rank loop with the uniform teleport vector ``1/n``."""
+    vertices = unified_vertices(graph)
+    return _rank_loop(
+        "pagerank",
+        vertices,
+        unified_edges(graph),
+        F.lit(1.0 / vertices.count()),
+        iterations,
+        damping,
+    )
 
 
 def personalized_pagerank(
@@ -987,71 +917,19 @@ def personalized_pagerank(
 ) -> DataFrame:
     """(id, rank) — random walk with restart to a single source
     (personalized PageRank, the standard graph-similarity /
-    recommendation primitive): the teleport vector is concentrated on
-    ``source_id`` instead of uniform, and dangling mass restarts at the
-    source too, so ranks measure proximity to the source rather than
-    global centrality. Same power-iteration / checkpoint-cadence shape
-    as :func:`pagerank`; fixed iteration count keeps the plan
-    deterministic. Vertices unreachable from the source keep rank 0 —
-    exact, not an artifact."""
-    sc = vertices.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(edges)
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_degree")
+    recommendation primitive): the rank loop with the teleport vector
+    concentrated on ``source_id``, so dangling mass restarts at the
+    source too and ranks measure proximity to the source rather than
+    global centrality. Vertices unreachable from the source keep
+    rank 0 — exact, not an artifact."""
+    return _rank_loop(
+        "personalized_pagerank",
+        vertices,
+        edges,
+        F.when(F.col("id") == source_id, F.lit(1.0)).otherwise(F.lit(0.0)),
+        iterations,
+        damping,
     )
-    is_src = F.col("id") == source_id
-    state = vertices.join(out_deg, "id", "left").na.fill(0, ["out_degree"])
-    state, state_ids = _ckpt(
-        state.withColumn(
-            "rank", F.when(is_src, F.lit(1.0)).otherwise(F.lit(0.0))
-        )
-    )
-
-    iter_secs: list[float] = []
-    try:
-        for _ in range(iterations):
-            t0 = time.perf_counter()
-            # shared pinned subtree — see _pin_state / pagerank
-            pinned = _pin_state(state)
-            contribs = (
-                edges.join(pinned, edges.src == pinned.id)
-                .select(
-                    "dst", (F.col("rank") / F.col("out_degree")).alias("c")
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("received"))
-            )
-            dangling = pinned.filter(F.col("out_degree") == 0).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dangling_m")
-            )
-            new_state = (
-                pinned.drop("rank")
-                .join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .withColumn(
-                    "rank",
-                    F.when(
-                        is_src,
-                        F.lit(1.0 - damping)
-                        + F.lit(damping) * F.col("__dangling_m"),
-                    ).otherwise(F.lit(0.0))
-                    + F.lit(damping)
-                    * F.coalesce(F.col("received"), F.lit(0.0)),
-                )
-                .drop("received", "__dangling_m")
-            )
-            new_state, new_ids = _ckpt(new_state)
-            _unpersist(sc, state_ids)
-            state, state_ids = new_state, new_ids
-            iter_secs.append(time.perf_counter() - t0)
-    except BaseException:
-        _unpersist(sc, state_ids)
-        raise
-    finally:
-        edge_cleanup(sc)
-    _record_iter("personalized_pagerank", iter_secs)
-    linger_ids(sc, state_ids)  # final superstep blocks back the result
-    return state.select("id", "rank")
 
 
 def shortest_paths(
@@ -1092,6 +970,45 @@ def shortest_paths(
     )
 
 
+def _hops(
+    name: str, edges: DataFrame, sources: DataFrame, max_depth: int
+) -> DataFrame:
+    """(root, id, dist) frontier expansion from every ``root`` at once
+    — see :func:`multi_source_hops`."""
+    with Supersteps(name, sources.sparkSession, edges) as run:
+        edges = run.edges
+        visited = run.checkpoint(
+            sources.select(
+                "root", F.col("root").alias("id"), F.lit(0).alias("dist")
+            ),
+            "level0",
+        )
+        # ``visited`` stays a LAZY union of the per-level checkpointed
+        # frontier frames: each union leaf is a checkpoint scan, so
+        # lineage stays O(depth) and no row is ever written twice
+        # (re-materializing the growing visited set every level would
+        # be O(levels x |visited|) copy work). The level blocks back
+        # the returned frame.
+        frontier = visited
+        for step in run.supersteps(max_depth):
+            depth = step + 1
+            slot = f"level{depth}"
+            neighbors = run.checkpoint(
+                edges.join(frontier, edges.src == frontier.id)
+                .select("root", F.col("dst").alias("id"))
+                .distinct()
+                .join(visited, ["root", "id"], "left_anti")
+                .select("root", "id", F.lit(depth).alias("dist")),
+                slot,
+            )
+            if neighbors.isEmpty():
+                run.free(slot)
+                break
+            visited = visited.unionByName(neighbors)
+            frontier = neighbors
+    return visited
+
+
 def multi_source_hops(
     edges: DataFrame,
     sources: DataFrame,
@@ -1103,45 +1020,14 @@ def multi_source_hops(
     column ``root`` (= starting vertex ids). The frontier/visited state
     is keyed by (root, id), so a single pass serves all roots — the
     Cypher shortestPath lowering uses this with the anchored endpoint
-    set as roots. Frontier joins shuffle on ``src``; state is
-    checkpointed per level so lineage stays flat (same cadence as
-    :func:`bfs_distances`). State size is O(sum of reachable sets),
-    which is why the compiler anchors BFS on the more selective
-    endpoint.
+    set as roots. Each level is one join of the frontier against the
+    iteration edge layout (above the size tier the family's shared
+    src-bucketed table, so no level re-exchanges the edge side) and is
+    checkpointed, so lineage stays flat. State size is O(sum of
+    reachable sets), which is why the compiler anchors BFS on the more
+    selective endpoint.
     """
-    sc = sources.sparkSession.sparkContext
-    visited, kept_ids = _ckpt(
-        sources.select(
-            "root", F.col("root").alias("id"), F.lit(0).alias("dist")
-        )
-    )
-    # ``visited`` stays a LAZY union of the per-level checkpointed
-    # frontier frames — the old form re-materialized the whole growing
-    # visited set every level (O(levels x |visited|) copy work); each
-    # union leaf here is a checkpoint scan, so lineage stays O(depth)
-    # and no row is ever written twice. Level blocks stay pinned: they
-    # back the returned frame (caller releases them).
-    frontier = visited
-    iter_secs: list[float] = []
-    for depth in range(1, max_depth + 1):
-        t0 = time.perf_counter()
-        neighbors, n_ids = _ckpt(
-            edges.join(frontier, edges.src == frontier.id)
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-            .join(visited, ["root", "id"], "left_anti")
-            .select("root", "id", F.lit(depth).alias("dist"))
-        )
-        iter_secs.append(time.perf_counter() - t0)
-        if neighbors.isEmpty():
-            _unpersist(sc, n_ids)
-            break
-        kept_ids |= n_ids
-        visited = visited.unionByName(neighbors)
-        frontier = neighbors
-    _record_iter("multi_source_hops", iter_secs)
-    linger_ids(sc, kept_ids)  # level blocks back the returned union
-    return visited
+    return _hops("multi_source_hops", edges, sources, max_depth)
 
 
 def bfs_distances(
@@ -1150,54 +1036,16 @@ def bfs_distances(
     max_depth: int = 6,
     undirected: bool = True,
 ) -> DataFrame:
-    """(id, dist) — breadth-first distances from ``start_id``.
-
-    Frontier expansion: one join + subtract per level; visited set and
-    frontier are checkpointed so lineage stays flat.
-
-    r14 (VERDICT r13 ask #1): the per-level frontier semi-join goes
-    through :func:`_iteration_edges` — above the size tier the edge
-    frame is the family's shared src-bucketed sorted table, so NO level
-    re-exchanges or re-sorts the edge side (the old shape shuffled the
-    full symmetrized frame once per level — the repo's largest measured
-    cost, 458.5 s at sf10); below the tier it keeps the measured-
-    optimal checkpoint shape. The frontier side is small per level and
-    exchanges into the 32-bucket spec via EnsureRequirements; an
-    explicit pin (``SPARK_GRAFT_PIN_STATE=on``) is the A/B knob only —
-    the frontier has ONE consumer per level, so there is no second
-    exchange for ReuseExchange to kill (finding 35's shape rule).
-    """
-    raw_edges = unified_edges(graph, undirected=undirected)
-    sc = raw_edges.sparkSession.sparkContext
-    edges, edge_cleanup = _iteration_edges(raw_edges)
-    visited, kept_ids = _ckpt(
+    """(id, dist) — breadth-first distances from ``start_id``:
+    :func:`multi_source_hops` with the single root ``start_id``."""
+    roots = (
         unified_vertices(graph)
         .filter(F.col("id") == start_id)
-        .select("id", F.lit(0).alias("dist"))
+        .select(F.col("id").alias("root"))
     )
-    # lazy union over per-level checkpoints — see multi_source_hops
-    frontier = visited
-    iter_secs: list[float] = []
-    try:
-        for depth in range(1, max_depth + 1):
-            t0 = time.perf_counter()
-            pinned = _pin_state(frontier, default="off")
-            neighbors, n_ids = _ckpt(
-                edges.join(pinned, edges.src == pinned.id)
-                .select(F.col("dst").alias("id"))
-                .distinct()
-                .join(visited, "id", "left_anti")
-                .select("id", F.lit(depth).alias("dist"))
-            )
-            iter_secs.append(time.perf_counter() - t0)
-            if neighbors.isEmpty():
-                _unpersist(sc, n_ids)
-                break
-            kept_ids |= n_ids
-            visited = visited.unionByName(neighbors)
-            frontier = neighbors
-    finally:
-        edge_cleanup(sc)
-    _record_iter("bfs_distances", iter_secs)
-    linger_ids(sc, kept_ids)  # level blocks back the returned union
-    return visited
+    return _hops(
+        "bfs_distances",
+        unified_edges(graph, undirected=undirected),
+        roots,
+        max_depth,
+    ).select("id", "dist")

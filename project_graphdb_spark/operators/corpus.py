@@ -1114,71 +1114,69 @@ def bpe_train(
     ``(merges, vocab)``: the ordered merge table rows and the final
     segmented vocabulary frame.
 
-    Each round's checkpoint supersedes the previous one, which is
-    freed immediately (the ``graph.algorithms`` superstep discipline) —
-    without that, ``n_merges`` vocabulary frames stay pinned in the
-    block manager for the life of the session. A caller that only
-    needs the merge table passes ``keep_vocab=False`` so the FINAL
-    round's checkpoint is freed too (the merges frame is built from
+    Each round's checkpoint supersedes the previous one, which the
+    ``graph.algorithms.Supersteps`` driver frees immediately — without
+    that, ``n_merges`` vocabulary frames stay pinned in the block
+    manager for the life of the session. A caller that only needs the
+    merge table passes ``keep_vocab=False`` so the FINAL round's
+    checkpoint is freed too (the merges frame is built from
     driver-collected rows and does not depend on it); otherwise the
     last vocab frame stays pinned for the life of the session.
     """
-    from project_graphdb_spark.graph.algorithms import _ckpt, _unpersist
+    from project_graphdb_spark.graph.algorithms import Supersteps
     from project_graphdb_spark.operators.text_fns import sliding_structs
 
     spark = docs.sparkSession
-    sc = spark.sparkContext
-    vocab, vocab_ids = _ckpt(
-        docs.select(F.explode(tokens("text")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("n"))
-        .withColumn("sym", F.split("word", ""))
-    )
     merges: list[tuple[int, str, str, str, int]] = []
-    for r in range(n_merges):
-        pairs = vocab.select(
-            "n", F.explode(sliding_structs(F.col("sym"), 2)).alias("p")
+    with Supersteps("bpe_train", spark) as run:
+        vocab = run.checkpoint(
+            docs.select(F.explode(tokens("text")).alias("word"))
+            .filter(F.col("word") != "")
+            .groupBy("word")
+            .agg(F.count("*").alias("n"))
+            .withColumn("sym", F.split("word", "")),
+            "vocab",
         )
-        top = (
-            pairs.groupBy(F.col("p.t0").alias("a"), F.col("p.t1").alias("b"))
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.desc("cnt"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["cnt"] < min_freq:
-            break
-        a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
-        merged = a + b
-        merges.append((r, a, b, merged, cnt))
-        fold = F.aggregate(
-            F.col("sym"),
-            F.array().cast("array<string>"),
-            lambda acc, s: F.when(
-                (F.size(acc) > 0)
-                & (F.element_at(acc, -1) == F.lit(a))
-                & (s == F.lit(b)),
-                F.concat(
-                    F.slice(acc, 1, F.size(acc) - 1),
-                    F.array(F.lit(merged)),
-                ),
-            ).otherwise(F.concat(acc, F.array(s))),
-        )
-        new_vocab, new_ids = _ckpt(vocab.withColumn("sym", fold))
-        _unpersist(sc, vocab_ids)
-        vocab, vocab_ids = new_vocab, new_ids
+        for r in run.supersteps(n_merges):
+            pairs = vocab.select(
+                "n", F.explode(sliding_structs(F.col("sym"), 2)).alias("p")
+            )
+            top = (
+                pairs.groupBy(
+                    F.col("p.t0").alias("a"), F.col("p.t1").alias("b")
+                )
+                .agg(F.sum("n").alias("cnt"))
+                .orderBy(F.desc("cnt"), "a", "b")
+                .limit(1)
+                .collect()
+            )
+            if not top or top[0]["cnt"] < min_freq:
+                break
+            a, b, cnt = top[0]["a"], top[0]["b"], int(top[0]["cnt"])
+            merged = a + b
+            merges.append((r, a, b, merged, cnt))
+            fold = F.aggregate(
+                F.col("sym"),
+                F.array().cast("array<string>"),
+                lambda acc, s: F.when(
+                    (F.size(acc) > 0)
+                    & (F.element_at(acc, -1) == F.lit(a))
+                    & (s == F.lit(b)),
+                    F.concat(
+                        F.slice(acc, 1, F.size(acc) - 1),
+                        F.array(F.lit(merged)),
+                    ),
+                ).otherwise(F.concat(acc, F.array(s))),
+            )
+            vocab = run.checkpoint(vocab.withColumn("sym", fold), "vocab")
+        if not keep_vocab:
+            run.free("vocab")
+            vocab = None
     merges_df = spark.createDataFrame(
         merges,
         "rank int, left string, right string, merged string, "
         "pair_count bigint",
     )
-    if not keep_vocab:
-        _unpersist(sc, vocab_ids)
-        return merges_df, None
-    from project_graphdb_spark.spark_util import linger_ids
-
-    linger_ids(sc, vocab_ids)  # final vocab blocks back the result
     return merges_df, vocab
 
 

@@ -13,6 +13,15 @@ from project_graphdb_spark.graph.algorithms import (
 )
 
 
+def _force_layout(monkeypatch, layout: str) -> None:
+    """Pin the edge-layout size tier: "bucketed" or "checkpoint"."""
+    from project_graphdb_spark.graph import algorithms as alg
+
+    monkeypatch.setattr(
+        alg, "_EDGE_LAYOUT_MIN_BYTES", 0 if layout == "bucketed" else 1 << 62
+    )
+
+
 def test_connected_components_two_islands(spark):
     verts = spark.createDataFrame(
         [(v,) for v in ["a", "b", "c", "d", "e", "f"]], "id string"
@@ -83,24 +92,22 @@ def test_pagerank_mass_conserved_on_tpch(spark, sf_dir):
 def test_pagerank_bucketed_edge_layout_equivalent(
     spark, sf_dir, monkeypatch
 ):
-    """The two edge layouts (bucketed = r11 measured default,
-    checkpoint = the r10 shape kept as a knob) must be
-    result-identical, and the bucketed run must drop its table on
-    cleanup. The sf10 A/B that picked the default lives in SCALE.md
-    finding 30."""
+    """The two edge layouts (bucketed above the size tier, checkpoint
+    below it) must be result-identical, and the release hook must drop
+    the bucketed run's table."""
     from project_graphdb_spark.graph.builder import tpch_graph
 
     g = tpch_graph(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "checkpoint")
+    _force_layout(monkeypatch, "checkpoint")
     base = {
         r.id: r.rank for r in pagerank(g, iterations=3).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    _force_layout(monkeypatch, "bucketed")
     bkt = {r.id: r.rank for r in pagerank(g, iterations=3).collect()}
     assert set(base) == set(bkt)
     for k, v in base.items():
         assert bkt[k] == pytest.approx(v, rel=1e-9), k
-    # bucketed layouts are session-cache-owned (r12): the release hook
+    # bucketed layouts are session-cache-owned: the release hook
     # must drop every table; nothing survives it
     from project_graphdb_spark.graph.algorithms import release_edge_layouts
 
@@ -116,7 +123,7 @@ def test_pagerank_bucketed_edge_layout_equivalent(
 def test_bucketed_edge_layout_shared_across_invocations(
     spark, sf_dir, monkeypatch
 ):
-    """r12 (VERDICT r11 ask #4): repeated algorithm runs over the same
+    """Repeated algorithm runs over the same
     edge frame must REUSE one bucketed table (plan-identity cache), and
     two semantically different frames (directed vs symmetrized) must
     NOT share — then the release hook drops everything."""
@@ -127,7 +134,7 @@ def test_bucketed_edge_layout_shared_across_invocations(
     )
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    _force_layout(monkeypatch, "bucketed")
     release_edge_layouts(spark)
 
     def tables():
@@ -396,7 +403,7 @@ def test_reliable_checkpoint_dir_env(spark, tmp_path, monkeypatch):
 
 
 def test_pregel_superstep_reuses_state_exchange(spark, sf_dir, monkeypatch):
-    """r13 (VERDICT r12 ask #3): the superstep's vertex-state frame
+    """The superstep's vertex-state frame
     feeds two joins (message pass, update) — both must consume ONE
     physical shuffle. localCheckpoint loses outputPartitioning under
     AQE (measured — see _pin_state), so the floor is one state
@@ -407,7 +414,7 @@ def test_pregel_superstep_reuses_state_exchange(spark, sf_dir, monkeypatch):
     ReusedExchange, and the bucketed edge scan stays exchange-free."""
     from project_graphdb_spark.graph import algorithms as alg
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    _force_layout(monkeypatch, "bucketed")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     edges0 = orders.select(
         F.col("o_custkey").cast("string").alias("src"),
@@ -458,8 +465,10 @@ def test_pregel_superstep_reuses_state_exchange(spark, sf_dir, monkeypatch):
         assert (
             plan.count("Exchange hashpartitioning") - reused == 2
         ), plan
-        # the bucketed edge scan feeds its SMJ directly
-        assert "SelectedBucketsCount: 32 out of 32" in plan, plan
+        # the bucketed edge scan feeds its SMJ directly, one bucket
+        # per shuffle partition
+        n = alg._edge_buckets(spark)
+        assert f"SelectedBucketsCount: {n} out of {n}" in plan, plan
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -468,14 +477,14 @@ def test_pregel_superstep_reuses_state_exchange(spark, sf_dir, monkeypatch):
 
 
 def test_unshareable_edge_layout_dropped_per_run(spark, monkeypatch):
-    """r13 (VERDICT r12 ask #4 / ADVICE): an edge frame rooted in a
+    """An edge frame rooted in a
     LogicalRDD (checkpoint-derived pair graphs — the dedup_clusters
     family) can never sameResult-hit the layout cache, so it must NOT
     take cache ownership: its bucketed table is dropped with the run,
     and the stats record the unshareable write + the per-run drop."""
     from project_graphdb_spark.graph import algorithms as alg
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    _force_layout(monkeypatch, "bucketed")
     alg.release_edge_layouts(spark)
 
     def tables():
@@ -509,14 +518,12 @@ def test_unshareable_edge_layout_dropped_per_run(spark, monkeypatch):
 def test_size_tier_falls_back_to_checkpoint_below_threshold(
     spark, sf_dir, monkeypatch
 ):
-    """r14 (VERDICT r13 ask #8): with NO explicit layout override, an
-    edge frame whose optimizer size estimate is below
-    SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES must take the checkpoint shape
+    """An edge frame whose size estimate is below the module's
+    _EDGE_LAYOUT_MIN_BYTES (sf0.001 is) must take the checkpoint shape
     (no bucketed table write) and record the tier decision."""
     from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.delenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", raising=False)
     g = tpch_graph(spark, sf_dir)
     edges = alg.unified_edges(g, undirected=True)
     before = dict(alg.EDGE_LAYOUT_STATS)
@@ -546,8 +553,7 @@ def test_size_tier_keeps_bucketed_above_threshold(
     from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.delenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_EDGE_LAYOUT_MIN_BYTES", "0")
+    _force_layout(monkeypatch, "bucketed")
     g = tpch_graph(spark, sf_dir)
     edges = alg.unified_edges(g, undirected=True)
     before = dict(alg.EDGE_LAYOUT_STATS)
@@ -564,44 +570,51 @@ def test_size_tier_keeps_bucketed_above_threshold(
         alg.release_edge_layouts(spark)
 
 
-def test_explicit_layout_env_bypasses_size_tier(spark, sf_dir, monkeypatch):
-    """SPARK_GRAFT_PREGEL_EDGE_LAYOUT=bucketed is a hard override: the
-    A/B harness must be able to force the layout for frames the tier
-    would reroute."""
+def test_size_estimate_failure_keeps_bucketed(spark, sf_dir, monkeypatch):
+    """Only a JVM error from the size estimate is absorbed (the frame
+    keeps the bucketed layout); any other error propagates."""
+    from py4j.protocol import Py4JError
+
     from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
     g = tpch_graph(spark, sf_dir)
     edges = alg.unified_edges(g, undirected=True)
+
+    def no_estimate(_edges):
+        raise Py4JError("no estimate")
+
+    def bug(_edges):
+        raise ValueError("not a JVM error")
+
+    alg.release_edge_layouts(spark)
+    monkeypatch.setattr(alg, "_edge_plan_size_bytes", no_estimate)
     before = dict(alg.EDGE_LAYOUT_STATS)
     e, cleanup = alg._iteration_edges(edges)
     try:
-        after = dict(alg.EDGE_LAYOUT_STATS)
-        assert after["writes"] == before["writes"] + 1
-        assert (
-            after["tier_checkpoint_fallbacks"]
-            == before["tier_checkpoint_fallbacks"]
-        )
+        assert alg.EDGE_LAYOUT_STATS["writes"] == before["writes"] + 1
+        monkeypatch.setattr(alg, "_edge_plan_size_bytes", bug)
+        with pytest.raises(ValueError, match="not a JVM error"):
+            alg._iteration_edges(edges)
     finally:
         cleanup(spark.sparkContext)
         alg.release_edge_layouts(spark)
 
 
 def test_bfs_layouts_result_identical(spark, sf_dir, monkeypatch):
-    """r14 (VERDICT r13 ask #1): BFS through the bucketed family layout
+    """BFS through the bucketed family layout
     must return exactly the frontier-expansion result of the
     checkpoint shape (integer distances — bit-exact equality)."""
     from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
     g = tpch_graph(spark, sf_dir)
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "checkpoint")
+    _force_layout(monkeypatch, "checkpoint")
     base = {
         r.id: r.dist
         for r in alg.bfs_distances(g, "Customer:1", max_depth=6).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    _force_layout(monkeypatch, "bucketed")
     bkt = {
         r.id: r.dist
         for r in alg.bfs_distances(g, "Customer:1", max_depth=6).collect()
@@ -611,18 +624,55 @@ def test_bfs_layouts_result_identical(spark, sf_dir, monkeypatch):
     assert base  # non-empty sanity
 
 
+def _edge_side_exchanges(plan: str) -> list[str]:
+    """Plan nodes between the bucketed edge-table scan and the join
+    that reads it (walking up the tree string by indentation) that
+    move data: Exchange, AQE shuffle read or a shuffle query stage."""
+    lines = plan.splitlines()
+
+    def depth(ln: str) -> int:
+        return len(ln) - len(ln.lstrip(" :|+-"))
+
+    scan = next(
+        i for i, ln in enumerate(lines)
+        if "FileScan" in ln and "pregel_edges_" in ln
+    )
+    found, d = [], depth(lines[scan])
+    for ln in reversed(lines[:scan]):
+        if depth(ln) >= d:
+            continue
+        d = depth(ln)
+        if "Join" in ln:
+            return found
+        if any(k in ln for k in ("Exchange", "ShuffleRead", "QueryStage")):
+            found.append(ln.strip())
+    raise AssertionError("edge scan has no join above it:\n" + plan)
+
+
+@pytest.mark.parametrize("algorithm", ["bfs_distances", "multi_source_hops"])
 def test_bfs_bucketed_level_join_has_no_edge_exchange(
-    spark, sf_dir, monkeypatch
+    spark, sf_dir, monkeypatch, algorithm
 ):
-    """The per-level frontier semi-join must read the bucketed edge
-    scan directly (SelectedBucketsCount) with no Exchange on the edge
-    side — the structural property the sf10 win rests on. Asserted
-    under the SMJ regime (broadcast off) like the pregel reuse test."""
+    """Every level join of the frontier expansion must read the
+    bucketed edge scan directly (SelectedBucketsCount) with no
+    Exchange on the edge side — the structural property the sf10 BFS
+    win rests on, which the Cypher shortestPath lowering
+    (multi_source_hops) shares. The level plans are captured from the
+    real run, under the SMJ regime (broadcast off) like the pregel
+    reuse test."""
     from project_graphdb_spark.graph import algorithms as alg
     from project_graphdb_spark.graph.builder import tpch_graph
 
-    monkeypatch.setenv("SPARK_GRAFT_PREGEL_EDGE_LAYOUT", "bucketed")
+    _force_layout(monkeypatch, "bucketed")
     g = tpch_graph(spark, sf_dir)
+    checkpointed = []
+    real_ckpt = alg._ckpt
+
+    def spy(df):
+        checkpointed.append(df)
+        return real_ckpt(df)
+
+    monkeypatch.setattr(alg, "_ckpt", spy)
     saved = {
         k: spark.conf.get(k)
         for k in (
@@ -633,40 +683,36 @@ def test_bfs_bucketed_level_join_has_no_edge_exchange(
     try:
         for k in saved:
             spark.conf.set(k, "-1")
-        edges, cleanup = alg._iteration_edges(
-            alg.unified_edges(g, undirected=True)
-        )
-        frontier = (
-            alg.unified_vertices(g)
-            .filter(F.col("id") == "Customer:1")
-            .select("id", F.lit(0).alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        level = (
-            edges.join(frontier, edges.src == frontier.id)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-        )
-        level.collect()  # finalize AQE
-        plan = (
-            level._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-            .split("== Initial Plan ==")[0]
-        )
-        # the edge side reads the bucketed table directly — and when
-        # the frontier carries a single-value constraint (level 1's
-        # start filter survives localCheckpoint via originConstraints)
-        # the scan even bucket-PRUNES (SelectedBucketsCount: 1 out of
-        # 32); either way no Exchange touches the edge side.
-        assert "SelectedBucketsCount:" in plan, plan
-        # exactly two physical hash exchanges: the frontier side into
-        # the join + the distinct's own; the edge side scans
-        # pre-partitioned with NO exchange between scan and join.
-        reused = plan.count("ReusedExchange")
-        assert plan.count("Exchange hashpartitioning") - reused == 2, plan
+        if algorithm == "bfs_distances":
+            alg.bfs_distances(g, "Customer:1", max_depth=3).collect()
+        else:
+            roots = (
+                alg.unified_vertices(g)
+                .filter(F.col("id").startswith("Customer:"))
+                .select(F.col("id").alias("root"))
+            )
+            alg.multi_source_hops(
+                alg.unified_edges(g, undirected=True), roots, max_depth=3
+            ).collect()
+        plans = [
+            p
+            for p in (
+                df._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+                .split("== Initial Plan ==")[0]
+                for df in checkpointed
+            )
+            if "pregel_edges_" in p
+        ]
+        assert len(plans) >= 2, plans  # one per expanded level
+        for plan in plans:
+            # level 1 may bucket-PRUNE (a single start id survives
+            # localCheckpoint as a constraint); either way the scan is
+            # the bucketed table and nothing shuffles it
+            assert "SelectedBucketsCount:" in plan, plan
+            assert _edge_side_exchanges(plan) == [], plan
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        cleanup(spark.sparkContext)
         alg.release_edge_layouts(spark)

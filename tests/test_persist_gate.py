@@ -14,6 +14,8 @@ FUTURE registry addition too.
 
 from __future__ import annotations
 
+import pytest
+
 from project_graphdb_spark import workload
 from project_graphdb_spark.spark_util import materialize, persistent_rdd_ids
 
@@ -66,51 +68,122 @@ def test_no_query_leaks_persistent_rdds(spark, sf_dir):
     assert not leftover, f"unreleased bucketed edge tables: {leftover}"
 
 
-def test_injected_superstep_failure_leaves_clean_state(
-    spark, sf_dir, monkeypatch
-):
-    """r12 (VERDICT r11 ask #3): a superstep that throws mid-loop must
-    not strand checkpoint blocks, and the bucketed edge table written
-    before the failure stays CACHE-owned — the release hook leaves a
-    clean warehouse. On a real cluster the old success-path-only
-    cleanup leaked corpus-scale parquet nobody owned."""
-    import pytest
+def _chain(spark):
+    verts = spark.createDataFrame(
+        [("a",), ("b",), ("c",), ("d",)], "id string"
+    )
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    return verts, edges
+
+
+def _run_pregel(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from project_graphdb_spark.graph import algorithms as alg
 
+    verts, edges = _chain(spark)
+    alg.pregel(
+        verts,
+        edges,
+        initial={"x": F.col("id")},
+        message=F.col("v_x"),
+        agg=F.min("__msg"),
+        update={"x": F.coalesce(F.col("__agg"), F.col("x"))},
+        max_iter=5,
+        telemetry_name="injected_failure",
+    )
+
+
+def _run_k_core(spark, sf_dir):
+    from project_graphdb_spark.graph import algorithms as alg
+
+    # a path peels in two rounds at k=2: the ends, then the middle
+    alg.k_core(k=2, edges=_chain(spark)[1])
+
+
+def _run_multi_source_hops(spark, sf_dir):
+    from project_graphdb_spark.graph import algorithms as alg
+
+    roots = spark.createDataFrame([("a",)], "root string")
+    alg.multi_source_hops(_chain(spark)[1], roots, max_depth=3)
+
+
+def _run_bfs_distances(spark, sf_dir):
+    from project_graphdb_spark.graph import algorithms as alg
+    from project_graphdb_spark.graph.builder import tpch_graph
+
+    alg.bfs_distances(tpch_graph(spark, sf_dir), "Customer:1", max_depth=3)
+
+
+def _run_bpe_train(spark, sf_dir):
+    from project_graphdb_spark.operators.corpus import bpe_train
+
+    docs = spark.createDataFrame(
+        [("abab abab cdcd cdcd abab",)], "text string"
+    )
+    bpe_train(docs, n_merges=4, min_freq=2)
+
+
+@pytest.mark.parametrize(
+    "run_loop, layout",
+    [
+        pytest.param(_run_pregel, "bucketed", id="pregel-bucketed"),
+        pytest.param(_run_pregel, "checkpoint", id="pregel-checkpoint"),
+        pytest.param(_run_k_core, "checkpoint", id="k_core"),
+        pytest.param(
+            _run_multi_source_hops, "bucketed", id="multi_source_hops-bucketed"
+        ),
+        pytest.param(
+            _run_multi_source_hops,
+            "checkpoint",
+            id="multi_source_hops-checkpoint",
+        ),
+        pytest.param(_run_bfs_distances, "bucketed", id="bfs_distances"),
+        pytest.param(_run_bpe_train, "checkpoint", id="bpe_train"),
+    ],
+)
+def test_injected_superstep_failure_leaves_clean_state(
+    spark, sf_dir, monkeypatch, run_loop, layout
+):
+    """A superstep that raises mid-loop — here right after superstep
+    2's first checkpoint landed, the window where fresh blocks exist
+    but the loop has not used them yet — must not strand any
+    checkpoint block: the superseded state, the fresh state, kept
+    per-level blocks and checkpoint-layout edge blocks are all freed
+    on the way out. A bucketed edge table written before the failure
+    stays CACHE-owned (reusable by a retry), and the release hook
+    leaves a clean warehouse."""
+    from project_graphdb_spark.graph import algorithms as alg
+
+    monkeypatch.setattr(
+        alg, "_EDGE_LAYOUT_MIN_BYTES", 0 if layout == "bucketed" else 1 << 62
+    )
+    armed = [False]
+    real_steps = alg.Supersteps.supersteps
+    real_checkpoint = alg.Supersteps.checkpoint
+
+    def steps(self, n):
+        for i in real_steps(self, n):
+            armed[0] = i >= 1
+            yield i
+
+    def checkpoint(self, df, slot):
+        out = real_checkpoint(self, df, slot)
+        if armed[0]:
+            raise RuntimeError("injected superstep failure")
+        return out
+
+    monkeypatch.setattr(alg.Supersteps, "supersteps", steps)
+    monkeypatch.setattr(alg.Supersteps, "checkpoint", checkpoint)
     alg.release_edge_layouts(spark)
     sc = spark.sparkContext
-    verts = spark.createDataFrame([("a",), ("b",), ("c",)], "id string")
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "src string, dst string"
-    )
     before = persistent_rdd_ids(sc)
-    calls = {"n": 0}
-    real = alg.aggregate_messages
-
-    def boom(*a, **k):
-        calls["n"] += 1
-        if calls["n"] >= 2:
-            raise RuntimeError("injected superstep failure")
-        return real(*a, **k)
-
-    monkeypatch.setattr(alg, "aggregate_messages", boom)
     with pytest.raises(RuntimeError, match="injected"):
-        alg.pregel(
-            verts,
-            edges,
-            initial={"x": F.col("id")},
-            message=F.col("v_x"),
-            agg=F.min("__msg"),
-            update={"x": F.coalesce(F.col("__agg"), F.col("x"))},
-            max_iter=5,
-            telemetry_name="injected_failure",
-        )
-    # every superstep checkpoint the loop made was freed on the way out
+        run_loop(spark, sf_dir)
+    assert armed[0], "the loop never reached superstep 2"
     assert persistent_rdd_ids(sc) - before == set()
-    # the adjacency table survives the failure as a CACHED layout
-    # (reusable by a retry), and the explicit release drops it
     alg.release_edge_layouts(spark)
     leftover = [
         t.name
@@ -123,11 +196,9 @@ def test_injected_superstep_failure_leaves_clean_state(
 def test_convergence_job_failure_frees_fresh_checkpoint(
     spark, monkeypatch
 ):
-    """r12 code-review fix: when the CONVERGENCE-count job dies after
-    `_ckpt(updated)` succeeded but before the state swap, the freshly
-    checkpointed blocks (new_ids) must be freed too — the first cut's
-    except-path only freed the superseded state."""
-    import pytest
+    """When the CONVERGENCE-count job dies after the superstep's state
+    checkpoint succeeded, the freshly checkpointed blocks must be freed
+    too, not only the superseded state."""
     from pyspark.sql import functions as F
 
     from project_graphdb_spark.graph import algorithms as alg
