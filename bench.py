@@ -74,7 +74,7 @@ def emit_results(payload: dict) -> dict:
         ),
     )
     try:
-        os.makedirs(os.path.dirname(detail_path), exist_ok=True)
+        os.makedirs(os.path.dirname(detail_path) or ".", exist_ok=True)
         with open(detail_path, "w") as f:
             json.dump(payload, f, indent=1)
     except OSError:
@@ -82,6 +82,23 @@ def emit_results(payload: dict) -> dict:
     compact = {k: v for k, v in payload.items() if k not in _BULKY_FIELDS}
     compact["detail_file"] = detail_path
     return compact
+
+
+def calib_norm_fields(
+    total: float, per_query: dict[str, float], calib: dict
+) -> dict:
+    """``value_calib_norm`` and ``queries_calib_norm``: the total and
+    per-query medians divided by the anchor's ``calib_sec``. Empty when
+    the anchor flags itself ``calib_unstable`` — a normalization by an
+    unstable anchor is not comparable across runs."""
+    if calib.get("calib_unstable"):
+        return {}
+    return {
+        "value_calib_norm": round(total / calib["calib_sec"], 3),
+        "queries_calib_norm": {
+            n: round(v / calib["calib_sec"], 3) for n, v in per_query.items()
+        },
+    }
 
 
 def main() -> None:
@@ -183,11 +200,7 @@ def main() -> None:
         # session's calib_sec — host slowdowns cancel to first
         # order, so THESE are the cross-round comparable numbers
         **calib,
-        "value_calib_norm": round(total / calib["calib_sec"], 3),
-        "queries_calib_norm": {
-            n: round(v / calib["calib_sec"], 3)
-            for n, v in per_query.items()
-        },
+        **calib_norm_fields(total, per_query, calib),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         # r14 (VERDICT r13 ask #2b): echo the session's REAL
         # parallelism so SPARK_GRAFT_CPUS honoring is directly

@@ -18,10 +18,15 @@ Scale design:
   — without it the plan doubles per iteration and the optimizer chokes
   long before 100 TB. On a cluster, ``GRAPHDB_SPARK_CHECKPOINT_DIR``
   switches to reliable ``checkpoint`` backed by HDFS/object storage.
-* Convergence checks (``changed == 0``) are FUSED into the update
-  projection: a ``__changed`` flag column computed where old and new
-  state are both in scope, summed over the just-checkpointed frame —
-  one narrow agg per iteration, never a new-state ⋈ old-state join.
+* Stop tests (rows changed, frontier size) ride the superstep's
+  checkpoint job as an observed sum (``Supersteps.checkpoint(...,
+  count=)``), so a converging superstep runs no driver action of its
+  own and never a new-state ⋈ old-state join: pregel's ``__changed``
+  flag is computed where old and new state are both in scope.
+* ``triangle_count`` on a property graph reads only the relationship
+  types whose label pair lies in a label triple the schema connects on
+  all three sides; a graph with no such triple counts 0 without
+  reading any edges.
 
 The measurements behind the layout and pinning choices are SCALE.md
 findings 30 and 34–36 (and the size tier in OPTIMIZATION_r14.md).
@@ -32,12 +37,13 @@ unions into one id space (same construction as the oracle SQL).
 
 from __future__ import annotations
 
+import itertools
 import os
 import threading
 import time
 
 from py4j.protocol import Py4JError
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from project_graphdb_spark.graph.property_graph import PropertyGraph
@@ -50,7 +56,7 @@ from project_graphdb_spark.spark_util import (
 
 # Per-superstep wall-times of the most recent successful run of each
 # iterative algorithm, keyed by algorithm name. Every superstep ends in
-# an eager checkpoint (and, when converging, an eager count), so the
+# an eager checkpoint (which also yields the stop test's count), so the
 # loop body boundaries ARE the superstep boundaries and a perf_counter
 # pair per superstep is an accurate timer. The scale-bench tooling
 # (tools/run_iterative_bench.py) and perfbench read this to report how
@@ -364,6 +370,11 @@ class Supersteps:
       before — the superseded state. Distinct slots keep several frames
       alive at once (the per-level blocks a BFS union reads);
       ``run.free(slot)`` releases one early.
+    * ``run.checkpoint(df, slot, count=cond)`` also returns how many
+      rows satisfy the boolean column ``cond``, as ``(frame, n)``. The
+      count is an ``Observation`` on the checkpoint's own job, so a
+      loop's stop test (rows changed, frontier size) costs no driver
+      action of its own.
     * ``for i in run.supersteps(n)`` yields ``0..n-1`` and times each
       superstep, including one left by ``break``.
 
@@ -400,12 +411,23 @@ class Supersteps:
         finally:
             self._edge_cleanup(self.sc)
 
-    def checkpoint(self, df: DataFrame, slot: str) -> DataFrame:
+    def checkpoint(
+        self, df: DataFrame, slot: str, count: Column | None = None
+    ) -> DataFrame | tuple[DataFrame, int]:
+        obs = None
+        if count is not None:
+            obs = Observation()
+            df = df.observe(
+                obs,
+                F.coalesce(F.sum(count.cast("long")), F.lit(0)).alias("n"),
+            )
         out, ids = _ckpt(df)
         superseded = self._held.get(slot, set())
         self._held[slot] = ids
         unpersist_ids(self.sc, superseded)
-        return out
+        if obs is None:
+            return out
+        return out, obs.get["n"]
 
     def free(self, slot: str) -> None:
         unpersist_ids(self.sc, self._held.pop(slot, set()))
@@ -437,10 +459,17 @@ def unified_vertices(graph: PropertyGraph) -> DataFrame:
     return out
 
 
-def unified_edges(graph: PropertyGraph, undirected: bool = False) -> DataFrame:
-    """(src, dst) in the unified id space; optionally symmetrized."""
+def unified_edges(
+    graph: PropertyGraph,
+    undirected: bool = False,
+    rel_types: set[str] | None = None,
+) -> DataFrame:
+    """(src, dst) in the unified id space; optionally symmetrized.
+    ``rel_types`` limits the union to those relationship types."""
     frames = []
     for rel_type, ef in graph.edges.items():
+        if rel_types is not None and rel_type not in rel_types:
+            continue
         meta = ef.meta
         e = ef.df.select(
             F.concat_ws(
@@ -561,15 +590,15 @@ def pregel(
     ``converge_on``: state column — stop when no row changes it.
 
     Each superstep checkpoints the state (lineage stays flat); the
-    convergence check is a fused ``__changed`` flag summed over the
-    just-checkpointed frame (no extra join job).
+    convergence check is a fused ``__changed`` flag counted by the
+    checkpoint job itself (no extra join, no extra job).
     """
     proj = ["id"] + [col.alias(name) for name, col in update.items()]
     if converge_on is not None:
         proj.append(
-            (~update[converge_on].eqNullSafe(F.col(converge_on)))
-            .cast("int")
-            .alias("__changed")
+            (~update[converge_on].eqNullSafe(F.col(converge_on))).alias(
+                "__changed"
+            )
         )
     with Supersteps(telemetry_name, vertices.sparkSession, edges) as run:
         state = run.checkpoint(
@@ -580,16 +609,16 @@ def pregel(
         )
         for _ in run.supersteps(max_iter):
             msgs = aggregate_messages(state, run.edges, message, agg)
-            state = run.checkpoint(
-                state.join(msgs, "id", "left").select(*proj), "state"
+            step = state.join(msgs, "id", "left").select(*proj)
+            if converge_on is None:
+                state = run.checkpoint(step, "state")
+                continue
+            state, changed = run.checkpoint(
+                step, "state", count=F.col("__changed")
             )
-            if converge_on is not None:
-                changed = state.agg(
-                    F.coalesce(F.sum("__changed"), F.lit(0))
-                ).collect()[0][0]
-                state = state.drop("__changed")
-                if changed == 0:
-                    break
+            state = state.drop("__changed")
+            if changed == 0:
+                break
     return state
 
 
@@ -660,10 +689,12 @@ def k_core(
     subgraph — recounting ALL surviving degrees from the full
     symmetric frame every round costs one full-E shuffle + an E-sized
     checkpoint per round (measured 3.4x at 10x data, the recount
-    dominating late near-empty rounds). Convergence = empty frontier, a
-    count on the vertex frame. A self-loop counts 1 toward its vertex's
-    degree (as in the symmetric-distinct formulation, which kept
-    exactly one ``u->u`` row).
+    dominating late near-empty rounds). Convergence = empty frontier,
+    counted by the job that checkpoints ``deg`` (the initial degrees
+    and every round's), so a round runs no separate count job. A
+    self-loop counts 1 toward its vertex's degree (as in the
+    symmetric-distinct formulation, which kept exactly one ``u->u``
+    row).
     """
     if graph is not None:
         directed = unified_edges(graph)
@@ -683,13 +714,16 @@ def k_core(
                 F.col("b").alias("id")
             )
         )
-        deg = run.checkpoint(
-            ends.groupBy("id").agg(F.count("*").alias("deg")), "deg"
+        peel = F.col("deg") < k
+        deg, n_removed = run.checkpoint(
+            ends.groupBy("id").agg(F.count("*").alias("deg")),
+            "deg",
+            count=peel,
         )
         for _ in run.supersteps(max_iter):
-            removed = deg.filter(F.col("deg") < k)
-            if removed.count() == 0:
+            if n_removed == 0:
                 break
+            removed = deg.filter(peel)
             nbr = canon.join(
                 removed.select(F.col("id").alias("a")), "a", "left_semi"
             ).select(F.col("b").alias("id")).unionAll(
@@ -699,7 +733,7 @@ def k_core(
             )
             delta = nbr.groupBy("id").agg(F.count("*").alias("__delta"))
             survivors = deg.filter(F.col("deg") >= k)
-            deg = run.checkpoint(
+            deg, n_removed = run.checkpoint(
                 survivors.join(delta, "id", "left").select(
                     "id",
                     (F.col("deg") - F.coalesce("__delta", F.lit(0))).alias(
@@ -707,6 +741,7 @@ def k_core(
                     ),
                 ),
                 "deg",
+                count=peel,
             )
         out = run.checkpoint(
             deg.select("id", F.col("deg").cast("bigint").alias("core_degree")),
@@ -761,6 +796,29 @@ def label_propagation(
     return state
 
 
+def _closable_rel_types(graph: PropertyGraph) -> set[str]:
+    """Relationship types of ``graph`` that can be an edge of a
+    triangle. Every vertex id carries its label, so a triangle's three
+    edges connect the label pairs of some label triple {a, b, c}
+    (labels may repeat; a self-relationship gives the one-label pair).
+    A type is kept only if its unordered label pair belongs to a triple
+    whose three pairs all have a relationship type — any other edge
+    closes no triangle, so dropping it leaves the count exact. The
+    schema-level analog of the compiler's FK join elimination."""
+    pair_of = {
+        rel_type: frozenset((ef.meta.source, ef.meta.target))
+        for rel_type, ef in graph.edges.items()
+    }
+    pairs = set(pair_of.values())
+    labels = sorted(set().union(*pairs))
+    closable: set[frozenset] = set()
+    for a, b, c in itertools.combinations_with_replacement(labels, 3):
+        sides = {frozenset((a, b)), frozenset((b, c)), frozenset((a, c))}
+        if sides <= pairs:
+            closable |= sides
+    return {t for t, pair in pair_of.items() if pair in closable}
+
+
 def triangle_count(
     graph: PropertyGraph | None = None,
     edges: DataFrame | None = None,
@@ -784,9 +842,20 @@ def triangle_count(
     edges point INTO them). Cost: two narrow degree joins to rank
     endpoints — linear, and dwarfed by the wedge-volume savings
     (sf1 measured 16.4 s → see SCALE.md for the post-change number).
+
+    With ``graph``, only the relationship types that can lie on a
+    triangle are read (:func:`_closable_rel_types`); when none can, the
+    result is the one-row 0 without reading any edges. ``edges`` is
+    counted as given.
     """
     if graph is not None:
-        edges = unified_edges(graph, undirected=True)
+        keep = _closable_rel_types(graph)
+        if not keep:
+            spark = next(iter(graph.nodes.values())).sparkSession
+            return spark.range(1).select(
+                F.lit(0).cast("bigint").alias("n_triangles")
+            )
+        edges = unified_edges(graph, undirected=True, rel_types=keep)
     assert edges is not None
     canon = edges.filter(F.col("src") < F.col("dst"))
     deg = (
@@ -993,15 +1062,16 @@ def _hops(
         for step in run.supersteps(max_depth):
             depth = step + 1
             slot = f"level{depth}"
-            neighbors = run.checkpoint(
+            neighbors, n_new = run.checkpoint(
                 edges.join(frontier, edges.src == frontier.id)
                 .select("root", F.col("dst").alias("id"))
                 .distinct()
                 .join(visited, ["root", "id"], "left_anti")
                 .select("root", "id", F.lit(depth).alias("dist")),
                 slot,
+                count=F.lit(True),
             )
-            if neighbors.isEmpty():
+            if n_new == 0:
                 run.free(slot)
                 break
             visited = visited.unionByName(neighbors)

@@ -28,7 +28,6 @@ for fact-sized ones. No ordering or collect anywhere.
 from __future__ import annotations
 
 import functools
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -332,24 +331,14 @@ def tpch_graph(spark: SparkSession, sf_dir: str) -> PropertyGraph:
                     *(r.table_name for r in gschema.relationships),
                 }
             ),
-            # r14 (VERDICT r13 ask #4): the graph's lineitem-backed edge
-            # frame (CONTAINS_ITEM) is consumed dst-first — its heavy
-            # aggregations key on dst = l_partkey (g_revenue_by_brand's
-            # per-part pre-agg), while every src-side (o_orderkey)
-            # consumer joins the orders endpoint as a BROADCAST at all
-            # measured SFs, so nothing downstream exploits l_orderkey
-            # partitioning. Naming l_partkey as the unsplittable-input
-            # spread key lets the one spread exchange double as the
-            # pre-agg exchange (plan: 6 → 5 exchanges on
-            # g_revenue_by_brand; no other graph consumer's plan keys
-            # change shape). Directory inputs ignore the hint.
-            # SPARK_GRAFT_GRAPH_SPREAD_KEY=off is the A/B knob (same
-            # convention as SPARK_GRAFT_SPREAD_SCAN / _PIN_STATE).
-            spread_keys=(
-                {}
-                if os.environ.get("SPARK_GRAFT_GRAPH_SPREAD_KEY") == "off"
-                else {"lineitem": "l_partkey"}
-            ),
+            # the lineitem-backed edge frame (CONTAINS_ITEM) is consumed
+            # dst-first: its heavy aggregations key on dst = l_partkey,
+            # while every src-side (o_orderkey) consumer broadcasts the
+            # orders endpoint. Spreading an unsplittable lineitem file
+            # on l_partkey lets that one exchange double as the
+            # per-part pre-aggregation exchange. Directory inputs
+            # ignore the hint.
+            spread_keys={"lineitem": "l_partkey"},
         )
         # trust_fk: the test-data generator maintains every declared FK
         # (verified r8: zero dangling keys at sf0.01/sf1), and every

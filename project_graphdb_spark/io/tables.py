@@ -82,10 +82,11 @@ _SPREAD_KEYS = {
     "supplier": "s_suppkey",
 }
 _SPREAD_MIN_ROWS_DEFAULT = 200_000
-# memo key is (path, mtime_ns, size) so an in-process rewrite of a table
-# file (data regen tooling) invalidates the cached footer metadata
-# (ADVICE r13); values never touch row data
-_LAYOUT_MEMO: dict[tuple[str, int, int], tuple[int, int] | None] = {}
+# path -> ((mtime_ns, size), layout): an in-process rewrite of a table
+# file (data regen tooling) invalidates the cached footer metadata and
+# replaces the path's one entry, so the memo holds at most one entry per
+# path; values never touch row data
+_LAYOUT_MEMO: dict[str, tuple[tuple[int, int], tuple[int, int] | None]] = {}
 
 
 def _single_file_layout(path: str) -> tuple[int, int] | None:
@@ -97,10 +98,10 @@ def _single_file_layout(path: str) -> tuple[int, int] | None:
         st = os.stat(path)
     except OSError:
         return None
-    memo_key = (path, st.st_mtime_ns, st.st_size)
-    got = _LAYOUT_MEMO.get(memo_key, False)
-    if got is not False:
-        return got
+    sig = (st.st_mtime_ns, st.st_size)
+    memo = _LAYOUT_MEMO.get(path)
+    if memo is not None and memo[0] == sig:
+        return memo[1]
     layout: tuple[int, int] | None = None
     try:
         if os.path.isfile(path):
@@ -110,7 +111,7 @@ def _single_file_layout(path: str) -> tuple[int, int] | None:
             layout = (meta.num_row_groups, meta.num_rows)
     except Exception:
         layout = None
-    _LAYOUT_MEMO[memo_key] = layout
+    _LAYOUT_MEMO[path] = (sig, layout)
     return layout
 
 

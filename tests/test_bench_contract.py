@@ -119,3 +119,28 @@ def test_bulky_fields_do_not_include_driver_contract():
         "value_calib_norm",
     }
     assert not protected & set(bench._BULKY_FIELDS)
+
+
+def test_bare_detail_filename_lands_in_cwd(tmp_path, monkeypatch):
+    """A SPARK_GRAFT_BENCH_DETAIL with no directory part is written to
+    the working directory, not dropped."""
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", "detail.json")
+    payload = _fake_payload()
+    compact = bench.emit_results(payload)
+    assert compact["detail_file"] == "detail.json"
+    assert json.loads((tmp_path / "detail.json").read_text()) == payload
+
+
+def test_calib_norm_only_from_a_stable_anchor():
+    """Normalized totals are emitted only when the anchor does not flag
+    itself unstable (an unstable anchor's normalization is not
+    comparable across runs)."""
+    per_query = {"q1": 2.0, "q2": 1.0}
+    stable = {"calib_sec": 2.0, "calib_unstable": False}
+    assert bench.calib_norm_fields(3.0, per_query, stable) == {
+        "value_calib_norm": 1.5,
+        "queries_calib_norm": {"q1": 1.0, "q2": 0.5},
+    }
+    unstable = {"calib_sec": 2.0, "calib_unstable": True}
+    assert bench.calib_norm_fields(3.0, per_query, unstable) == {}

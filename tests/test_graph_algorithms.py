@@ -249,6 +249,107 @@ def test_triangle_count_skewed_hub_matches_brute_force(spark):
     assert n == expected == 39 + 10  # 39 hub triangles + C(5,3) clique
 
 
+def _schema_graph(spark):
+    """A property graph whose schema closes one label triple (A-B,
+    B-C, A-C, plus the self-relationship A-A) and has one pendant type
+    C-Pendant that no triangle can use. Returns (graph, undirected
+    edge set over "Label:key" ids)."""
+    from project_graphdb_spark.graph.property_graph import (
+        EdgeFrame,
+        PropertyGraph,
+    )
+    from project_graphdb_spark.schema.graph_schema import (
+        GraphSchema,
+        NodeDef,
+        RelationshipDef,
+    )
+
+    rels = {
+        # (source, target): edges as (src key, dst key)
+        ("A", "B"): [(1, 1), (1, 2), (2, 2), (3, 1)],
+        ("B", "C"): [(1, 1), (2, 1), (2, 2), (1, 3)],
+        ("A", "C"): [(1, 1), (2, 1), (2, 2), (3, 3)],
+        ("A", "A"): [(1, 2), (2, 3), (3, 1)],
+        ("C", "Pendant"): [(1, 1), (2, 1), (3, 2), (1, 2)],
+    }
+    nodes, defs, frames, und = {}, [], {}, set()
+    for label in ("A", "B", "C", "Pendant"):
+        nodes[label] = spark.createDataFrame(
+            [(k,) for k in range(1, 4)], "k int"
+        )
+    for (a, b), pairs in rels.items():
+        meta = RelationshipDef(
+            source=a, target=b, label=f"{a}_TO_{b}", key_s="s", key_t="t"
+        )
+        defs.append(meta)
+        frames[meta.label] = EdgeFrame(
+            meta=meta,
+            df=spark.createDataFrame(pairs, "src int, dst int"),
+        )
+        for x, y in pairs:
+            u, v = f"{a}:{x}", f"{b}:{y}"
+            if u != v:
+                und.add(frozenset((u, v)))
+    schema = GraphSchema(
+        nodes=[NodeDef(name=label, key="k") for label in nodes],
+        relationships=defs,
+    )
+    return PropertyGraph(schema, nodes, frames), und
+
+
+def test_triangle_count_schema_pruning_exact(spark):
+    """Schema pruning drops only relationship types that close no
+    triangle: the count equals brute force over ALL edges, and the
+    pendant type's frame is absent from the plan."""
+    import itertools
+
+    from project_graphdb_spark.graph.algorithms import (
+        _closable_rel_types,
+        triangle_count,
+    )
+
+    g, und = _schema_graph(spark)
+    assert _closable_rel_types(g) == {
+        "A_TO_B", "B_TO_C", "A_TO_C", "A_TO_A"
+    }
+    verts = sorted({v for e in und for v in e})
+    expected = sum(
+        1
+        for a, b, c in itertools.combinations(verts, 3)
+        if {frozenset((a, b)), frozenset((b, c)), frozenset((a, c))} <= und
+    )
+    df = triangle_count(graph=g)
+    assert df.collect()[0]["n_triangles"] == expected > 0
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "Pendant" not in plan, plan
+
+
+def test_triangle_count_tpch_schema_prunes_to_one_job(spark, sf_dir):
+    """No label triple of the TPC-H graph schema is connected on all
+    three sides, so the count is 0 without reading any edge: the
+    result is the one-row bigint frame and collecting it runs one
+    job."""
+    from project_graphdb_spark.graph.algorithms import (
+        _closable_rel_types,
+        triangle_count,
+    )
+    from project_graphdb_spark.graph.builder import tpch_graph
+
+    g = tpch_graph(spark, sf_dir)
+    assert _closable_rel_types(g) == set()
+    sc = spark.sparkContext
+    group = "triangle_count_schema_pruned"
+    sc.setJobGroup(group, group)
+    try:
+        df = triangle_count(g)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows == [(0,)]
+    assert df.schema.simpleString() == "struct<n_triangles:bigint>"
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_label_propagation_disconnected_cliques(spark):
     from project_graphdb_spark.graph.algorithms import label_propagation
 
@@ -393,6 +494,15 @@ def test_reliable_checkpoint_dir_env(spark, tmp_path, monkeypatch):
         for r in connected_components(vertices=verts, edges=edges).collect()
     }
     assert reliable == base
+    # the observed stop count matches the checkpointed frame's rows
+    from project_graphdb_spark.graph.algorithms import Supersteps
+
+    frame = spark.range(100).withColumn("x", F.col("id") % 7)
+    with Supersteps("reliable_count", spark) as run:
+        out, n = run.checkpoint(frame, "s", count=F.col("x") < 3)
+        assert n == out.filter(F.col("x") < 3).count() == 44
+        _, n_all = run.checkpoint(frame, "s", count=F.lit(True))
+        assert n_all == 100
     # reliable checkpoint files were written under the env dir
     written = [
         os.path.join(dp, f)
@@ -400,6 +510,68 @@ def test_reliable_checkpoint_dir_env(spark, tmp_path, monkeypatch):
         for f in fn
     ]
     assert written, "no checkpoint files under GRAPHDB_SPARK_CHECKPOINT_DIR"
+
+
+def test_supersteps_run_no_driver_action(spark, monkeypatch):
+    """A converging loop's stop test rides its checkpoint job: with
+    DataFrame.collect/count/isEmpty raising, pregel(converge_on=...),
+    k_core and multi_source_hops still run several supersteps to their
+    fixed point and return the same results."""
+    from project_graphdb_spark.graph import algorithms as alg
+
+    # pyspark 4: the classic DataFrame SUBCLASS defines the actions
+    try:
+        from pyspark.sql.classic.dataframe import DataFrame
+    except ImportError:  # older pyspark: single class
+        from pyspark.sql import DataFrame
+
+    chain = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")]
+    verts = spark.createDataFrame([(v,) for v in "abcde"], "id string")
+    edges = spark.createDataFrame(chain, "src string, dst string")
+    # a triangle with a pendant path: the 2-core is the triangle
+    kc_edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")],
+        "src string, dst string",
+    )
+    roots = spark.createDataFrame([("a",)], "root string")
+
+    def banned(self, *args, **kwargs):
+        raise AssertionError("driver action inside a superstep")
+
+    for action in ("collect", "count", "isEmpty"):
+        monkeypatch.setattr(DataFrame, action, banned)
+    alg.LAST_ITER_SECONDS.clear()
+    outs = {
+        "pregel": alg.pregel(
+            verts,
+            edges,
+            initial={"x": F.col("id")},
+            message=F.col("v_x"),
+            agg=F.min("__msg"),
+            update={"x": F.least("x", F.coalesce("__agg", "x"))},
+            max_iter=10,
+            converge_on="x",
+        ),
+        "k_core": alg.k_core(k=2, edges=kc_edges),
+        "multi_source_hops": alg.multi_source_hops(
+            edges, roots, max_depth=10
+        ),
+    }
+    monkeypatch.undo()
+    steps = {name: len(alg.LAST_ITER_SECONDS[name]) for name in outs}
+    # pregel: 4 propagating supersteps + the one that sees no change;
+    # k_core: peel d-e in 2 rounds, then the empty frontier;
+    # hops: 4 levels + the empty one
+    assert steps == {"pregel": 5, "k_core": 3, "multi_source_hops": 5}
+    assert {tuple(r) for r in outs["pregel"].collect()} == {
+        (v, "a") for v in "abcde"
+    }
+    assert {tuple(r) for r in outs["k_core"].collect()} == {
+        ("a", 2), ("b", 2), ("c", 2)
+    }
+    assert {tuple(r) for r in outs["multi_source_hops"].collect()} == {
+        ("a", v, d) for d, v in enumerate("abcde")
+    }
 
 
 def test_pregel_superstep_reuses_state_exchange(spark, sf_dir, monkeypatch):

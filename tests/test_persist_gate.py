@@ -169,8 +169,8 @@ def test_injected_superstep_failure_leaves_clean_state(
             armed[0] = i >= 1
             yield i
 
-    def checkpoint(self, df, slot):
-        out = real_checkpoint(self, df, slot)
+    def checkpoint(self, df, slot, *args, **kwargs):
+        out = real_checkpoint(self, df, slot, *args, **kwargs)
         if armed[0]:
             raise RuntimeError("injected superstep failure")
         return out
@@ -196,19 +196,15 @@ def test_injected_superstep_failure_leaves_clean_state(
 def test_convergence_job_failure_frees_fresh_checkpoint(
     spark, monkeypatch
 ):
-    """When the CONVERGENCE-count job dies after the superstep's state
-    checkpoint succeeded, the freshly checkpointed blocks must be freed
-    too, not only the superseded state."""
+    """When reading the CONVERGENCE count fails after the superstep's
+    state checkpoint succeeded, the freshly checkpointed blocks must be
+    freed too, not only the superseded state. The count rides the
+    checkpoint job as an observation, so the failure is injected into
+    the observed read."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from project_graphdb_spark.graph import algorithms as alg
-
-    # pyspark 4: the classic DataFrame SUBCLASS defines collect, so
-    # the base class is not the dispatch target
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # older pyspark: single class
-        from pyspark.sql import DataFrame
 
     alg.release_edge_layouts(spark)
     sc = spark.sparkContext
@@ -217,26 +213,22 @@ def test_convergence_job_failure_frees_fresh_checkpoint(
         [("a", "b"), ("b", "c")], "src string, dst string"
     )
     before = persistent_rdd_ids(sc)
-    real_collect = DataFrame.collect
 
     def boom(self):
-        raise RuntimeError("injected convergence-job failure")
+        raise RuntimeError("injected convergence-count failure")
 
-    monkeypatch.setattr(DataFrame, "collect", boom)
-    try:
-        with pytest.raises(RuntimeError, match="injected convergence"):
-            alg.pregel(
-                verts,
-                edges,
-                initial={"x": F.col("id")},
-                message=F.col("v_x"),
-                agg=F.min("__msg"),
-                update={"x": F.coalesce(F.col("__agg"), F.col("x"))},
-                max_iter=5,
-                converge_on="x",
-                telemetry_name="injected_convergence_failure",
-            )
-    finally:
-        monkeypatch.setattr(DataFrame, "collect", real_collect)
+    monkeypatch.setattr(Observation, "get", property(boom))
+    with pytest.raises(RuntimeError, match="injected convergence"):
+        alg.pregel(
+            verts,
+            edges,
+            initial={"x": F.col("id")},
+            message=F.col("v_x"),
+            agg=F.min("__msg"),
+            update={"x": F.coalesce(F.col("__agg"), F.col("x"))},
+            max_iter=5,
+            converge_on="x",
+            telemetry_name="injected_convergence_failure",
+        )
     assert persistent_rdd_ids(sc) - before == set()
     alg.release_edge_layouts(spark)

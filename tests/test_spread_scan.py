@@ -122,3 +122,19 @@ def _clean_layout_memo():
     # tmp_path entries are unique per test; keep the memo from growing
     # across the suite anyway
     tables._LAYOUT_MEMO.clear()
+
+
+def test_layout_memo_replaces_a_rewritten_files_entry(tmp_path):
+    """A rewritten file gets its new footer read, and the memo keeps
+    one entry per path rather than one per version."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    for version, rows in enumerate((10, 25, 40)):
+        pq.write_table(pa.table({"k": list(range(rows))}), path)
+        # distinct mtimes even on a coarse-grained filesystem clock
+        os.utime(path, ns=(version * 10**9, version * 10**9))
+        assert tables._single_file_layout(path) == (1, rows)
+        assert tables._single_file_layout(path) == (1, rows)  # memo hit
+        assert list(tables._LAYOUT_MEMO) == [path]
