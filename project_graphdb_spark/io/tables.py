@@ -72,7 +72,7 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # inputs (every at-scale layout, including tools/gen_scale_data.py
 # output) and small dimensions are untouched, so at 100 TB this is a
 # structural no-op — it is input-layout adaptivity, not a local[32]
-# tuning constant. SPARK_GRAFT_SPREAD_SCAN=off disables it for A/Bs.
+# tuning constant.
 _SPREAD_KEYS = {
     "lineitem": "l_orderkey",
     "orders": "o_orderkey",
@@ -81,7 +81,7 @@ _SPREAD_KEYS = {
     "part": "p_partkey",
     "supplier": "s_suppkey",
 }
-_SPREAD_MIN_ROWS_DEFAULT = 200_000
+_SPREAD_MIN_ROWS = 200_000  # read at call time, so tests can patch it
 # path -> ((mtime_ns, size), layout): an in-process rewrite of a table
 # file (data regen tooling) invalidates the cached footer metadata and
 # replaces the path's one entry, so the memo holds at most one entry per
@@ -91,7 +91,8 @@ _LAYOUT_MEMO: dict[str, tuple[tuple[int, int], tuple[int, int] | None]] = {}
 
 def _single_file_layout(path: str) -> tuple[int, int] | None:
     """(row_groups, rows) for a single parquet FILE; None for
-    directories (the at-scale layout) or unreadable footers. Footer
+    directories (the at-scale layout), unreadable files and footers
+    that are not parquet (garbage or 0 bytes); other errors raise. Footer
     reads are memoized per (path, mtime, size) — they never touch row
     data, and a rewritten file never reuses a stale entry."""
     try:
@@ -102,14 +103,15 @@ def _single_file_layout(path: str) -> tuple[int, int] | None:
     memo = _LAYOUT_MEMO.get(path)
     if memo is not None and memo[0] == sig:
         return memo[1]
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     layout: tuple[int, int] | None = None
     try:
         if os.path.isfile(path):
-            import pyarrow.parquet as pq
-
             meta = pq.ParquetFile(path).metadata
             layout = (meta.num_row_groups, meta.num_rows)
-    except Exception:
+    except (OSError, pa.ArrowInvalid):
         layout = None
     _LAYOUT_MEMO[path] = (sig, layout)
     return layout
@@ -122,10 +124,6 @@ def _spread_if_unsplittable(
     name: str,
     spread_key: str | None = None,
 ) -> DataFrame:
-    # both knobs are read PER CALL (ADVICE r13 — the min-rows floor used
-    # to bind at import time while the on/off switch was per-call)
-    if os.environ.get("SPARK_GRAFT_SPREAD_SCAN", "auto") == "off":
-        return df
     key = spread_key or _SPREAD_KEYS.get(name)
     if key is None:
         return df
@@ -133,13 +131,8 @@ def _spread_if_unsplittable(
     if layout is None:
         return df
     row_groups, rows = layout
-    min_rows = int(
-        os.environ.get(
-            "SPARK_GRAFT_SPREAD_MIN_ROWS", str(_SPREAD_MIN_ROWS_DEFAULT)
-        )
-    )
     n = spark.sparkContext.defaultParallelism
-    if rows >= min_rows and row_groups < n:
+    if rows >= _SPREAD_MIN_ROWS and row_groups < n:
         return df.repartition(n, key)
     return df
 

@@ -33,8 +33,6 @@ Scale story:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +43,7 @@ from project_graphdb_spark.operators.text_fns import (
     mix32_sql,
     tokens,
 )
+from project_graphdb_spark.spark_util import linger, release_lingering
 from project_graphdb_spark.workload import register
 
 # every doc_id divisible by 29 plays the role of a held-out benchmark
@@ -209,32 +208,11 @@ def doc_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DUP_SPAN_N = 8  # span window for corpus-wide duplicate detection
 
-# Frames persisted by a builder but consumed by the RETURNED lazy plan
-# (dup, keep_stats) cannot be unpersisted inside the builder — yet a
-# long-lived session running many queries back-to-back (the driver's
-# 50-query correctness gate never calls free_all_persistent, unlike
-# the bench tools) would accumulate one cached frame set per call.
-# One-slot rolling window: each top-level dup-span/pipeline call first
-# releases the PREVIOUS call's lingering frames, so at most one stale
-# set survives at any time. Unpersisting a frame a caller still holds
-# is always safe — the plan recomputes (ADVICE r8 low #2).
-#
-# CONSTRAINT (ADVICE r9): at most ONE outstanding dup-span/pipeline
-# PLAN per process. Building a second plan (doc_dup_span_profile,
-# doc_dup_span_scrub, pipeline_clean_pack) before materializing the
-# first unpersists frames the first plan still reads — the first plan
-# stays CORRECT (Spark recomputes evicted cache) but its dup-span
-# stages fully recompute, distorting any timing. Every harness in this
-# repo (driver gate, bench.py, scale/twin benches) builds+materializes
-# one query at a time, satisfying this by construction.
-#
-# r10: the window itself moved to spark_util (the persist-leak gate
-# found the same pattern in five more families); these aliases keep
-# the r8/r9 call sites and tests stable.
-from project_graphdb_spark.spark_util import (  # noqa: E402
-    linger as _linger,
-    release_lingering as _release_lingering,
-)
+# The dup-span builders persist frames (dup, keep_stats) that the
+# RETURNED lazy plan still reads, so they register them in spark_util's
+# one-slot lingering window instead of unpersisting them here; each
+# top-level call first releases the previous call's frames. See
+# spark_util for the one-outstanding-plan constraint this implies.
 
 
 def _span_grams(col, n: int):
@@ -246,121 +224,35 @@ def _span_grams(col, n: int):
     return sliding_grams(tokens(col), n)
 
 
-#: dup-span build shape: "docfilter" (default since r11, MEASURED —
-#: SCALE.md finding 31: narrow hash-only DISK cache + string re-explode
-#: restricted to candidate DOCS; pipeline_clean_pack −10/−15% in both
-#: interleaved sf10 reps) vs "strcache" (the finding-26 r10 optimum —
-#: full span STRING frame cached DISK_ONLY, pass 2 a cache scan), kept
-#: runnable by the same harness. Env-gated per the finding-27a
-#: measure-before-landing rule; row-identity pinned by
-#: tests/test_corpus_ops.py::test_dup_span_docfilter_shape_equivalent.
-_DUPSPAN_SHAPE_ENV = "SPARK_GRAFT_DUPSPAN_SHAPE"
+def _dup_span_frames(docs: DataFrame, n: int = DUP_SPAN_N):
+    """(cand_spans, dup) shared by the duplicate-span operators:
+    cand_spans is (doc_id, s, gram) restricted to spans whose gram
+    HASH occurs in ≥2 distinct documents (a superset of true dups —
+    rare 64-bit collisions only add rows), persisted; dup the exactly
+    verified grams occurring in ≥2 distinct docs (cross-document
+    duplication only — a span repeated inside one doc is that doc's
+    own business).
 
+    1. ONE narrow pass explodes positional grams and keeps only
+       (doc_id, s, xxhash64(gram)), cached DISK_ONLY: the 8-byte-key
+       frame is ~5x slimmer than the string frame, and the gram
+       strings are built transiently for hashing, never stored.
+    2. Candidate hashes (≥2 distinct docs) aggregate on the 8-byte key
+       from that cache; the string key would shuffle ~120 B/row.
+    3. Candidate DOCS — docs holding at least one candidate position —
+       re-explode with gram strings, semi-joined on the candidate
+       hashes, and the surviving rows are persisted. Every downstream
+       consumer (exact verify, profile's dup counts, scrub's dup
+       positions) reads that small frame instead of the corpus.
 
-def _dup_span_frames_posjoin(docs: DataFrame, n: int):
-    """r14 candidate-POSITION shape of :func:`_dup_span_frames` (same
-    returned frames, row-identical — VERDICT r13 ask #5):
+    String construction is paid twice only for the duplicate-bearing
+    slice of the corpus, and the full-width span frame is never
+    written. SCALE.md finding 31 records the sf10 A/B that chose this
+    shape over caching the full span-string frame.
 
-    The docfilter shape re-runs the full gram pipeline (tokenize →
-    sliding_structs → concat transform → explode → xxhash64) over every
-    position of every candidate DOC in pass 2, then throws away the
-    non-candidate positions via the hash semi-join. But pass 1's narrow
-    DISK_ONLY cache already knows the candidate POSITIONS exactly —
-    ``(doc_id, s, gh)`` semi-joined on the candidate hashes — so pass 2
-    here rebuilds gram strings ONLY at those positions: one tokenize
-    per candidate doc, then ``concat_ws(' ', slice(toks, s+1, n))`` per
-    candidate position. String construction is paid once per FINAL
-    candidate row instead of once per candidate-doc position, and the
-    second explode + re-hash disappear.
-
-    Equivalence: position s's gram is concat_ws(' ', toks[s+1..s+n])
-    by the sliding_structs contract (same separator, same slice), and
-    the kept set {(doc_id, s): gh ∈ candidate hashes} is exactly the
-    docfilter semi-join's set because gh was computed as
-    xxhash64(gram) from the identical string in pass 1 — pinned by
-    tests/test_corpus_ops.py::test_dup_span_posjoin_shape_equivalent.
-
-    The join carries each candidate doc's token array to its candidate
-    positions; SMJ buffers one doc row per key and the projection
-    fuses, so the array is never shuffled per position row.
-
-    MEASURED AND REJECTED as the default (r14 A/B,
-    measurements/r14/ab_dupspan_posjoin_sf1.json — same-session
-    interleaved, anchored, sf1): profile 12.1 s docfilter vs 21.0 s
-    posjoin, scrub 14.6 vs 24.3 (+70% both consumers). The synthetic
-    corpora are duplication-dense enough that candidate positions are
-    a large share of candidate-doc positions, so per-position
-    slice+concat (plus shipping the token array through the join) costs
-    more than one vectorized sliding_grams pass over candidate docs —
-    the same density regime that decided finding 40. Kept runnable for
-    duplicate-sparse corpora where the trade reverses."""
-    from pyspark import StorageLevel
-
-    hs = docs.select(
-        "doc_id",
-        F.posexplode(_span_grams("text", n)).alias("s", "gram"),
-    ).select(
-        "doc_id", "s", F.xxhash64("gram").alias("gh")
-    ).persist(StorageLevel.DISK_ONLY)
-    cand_hashes = (
-        hs.select("gh", "doc_id")
-        .groupBy("gh")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gh")
-    ).persist()
-    n_cand = cand_hashes.count()
-    ch = (
-        F.broadcast(cand_hashes) if n_cand <= 2_000_000 else cand_hashes
-    )
-    cand_pos = hs.join(ch, "gh", "left_semi").select("doc_id", "s")
-    cand_toks = docs.join(
-        cand_pos.select("doc_id").distinct(), "doc_id", "left_semi"
-    ).select("doc_id", tokens("text").alias("__toks"))
-    cand_spans = _linger(
-        cand_pos.join(cand_toks, "doc_id")
-        .select(
-            "doc_id",
-            "s",
-            F.concat_ws(
-                " ", F.slice("__toks", F.col("s") + 1, n)
-            ).alias("gram"),
-        )
-        .persist()
-    )
-    dup = _linger(
-        cand_spans.groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gram")
-        .persist()
-    )
-    n_dup = dup.count()  # materializes cand_spans' cache too
-    cand_hashes.unpersist()
-    hs.unpersist()
-    if n_dup <= 500_000:
-        dup = F.broadcast(dup)
-    return cand_spans, dup
-
-
-def _dup_span_frames_docfilter(docs: DataFrame, n: int):
-    """The r11 candidate-doc-prefilter shape of :func:`_dup_span_frames`
-    (same returned frames, row-identical):
-
-    1. ONE narrow pass: explode positional grams, keep only
-       (doc_id, s, xxhash64(gram)) — the 8-byte-key frame cached
-       DISK_ONLY is ~5x slimmer than the string frame (gram strings
-       are built transiently for hashing and never stored);
-    2. candidate hashes (>=2 distinct docs) from the narrow cache;
-    3. candidate DOCS = docs holding at least one candidate position —
-       only these re-explode with gram STRINGS in pass 2, so string
-       construction is paid twice only for the duplicate-bearing slice
-       of the corpus, and the full-width span frame is never written.
-
-    Wins when the candidate-doc fraction is well under 1 (duplicate
-    spans concentrate in few docs); loses when duplication is corpus-
-    wide, where re-constructing most strings costs more than the
-    finding-26 disk round-trip. Decided by the sf10 A/B in SCALE.md.
+    The returned gram set stays EXACT: flags are verified on gram
+    strings; a hash collision costs a few extra candidate rows, never
+    a wrong flag.
     """
     from pyspark import StorageLevel
 
@@ -377,6 +269,9 @@ def _dup_span_frames_docfilter(docs: DataFrame, n: int):
         .filter(F.col("nd") >= 2)
         .select("gh")
     ).persist()
+    # the aggregate's size ESTIMATE inherits the exploded input's, so
+    # Catalyst would plan the probe as a shuffle join; decide from the
+    # MEASURED candidate count instead (finding 14)
     n_cand = cand_hashes.count()
     ch = (
         F.broadcast(cand_hashes) if n_cand <= 2_000_000 else cand_hashes
@@ -388,12 +283,12 @@ def _dup_span_frames_docfilter(docs: DataFrame, n: int):
         "doc_id",
         F.posexplode(_span_grams("text", n)).alias("s", "gram"),
     )
-    cand_spans = _linger(
+    cand_spans = linger(
         respans.join(
             ch, F.xxhash64("gram") == F.col("gh"), "left_semi"
         ).persist()
     )
-    dup = _linger(
+    dup = linger(
         cand_spans.groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("nd"))
         .filter(F.col("nd") >= 2)
@@ -403,104 +298,6 @@ def _dup_span_frames_docfilter(docs: DataFrame, n: int):
     n_dup = dup.count()  # materializes cand_spans' cache too
     cand_hashes.unpersist()
     hs.unpersist()
-    if n_dup <= 500_000:
-        dup = F.broadcast(dup)
-    return cand_spans, dup
-
-
-def _dup_span_frames(docs: DataFrame, n: int = DUP_SPAN_N):
-    """(cand_spans, dup) shared by the duplicate-span operators:
-    cand_spans is (doc_id, s, gram) restricted to spans whose gram
-    HASH occurs in ≥2 distinct documents (a superset of true dups —
-    rare 64-bit collisions only add rows), persisted; dup the exactly
-    verified grams occurring in ≥2 distinct docs (cross-document
-    duplication only — a span repeated inside one doc is that doc's
-    own business).
-
-    Two corpus tokenize/explode passes TOTAL (r9, VERDICT r8 ask #4;
-    was three):
-
-    1. hashed candidate detection — the naive groupBy(gram) shuffles
-       the FULL exploded frame on the ~n-token STRING key (~120 B/row,
-       measured 152 s for the profile at sf10); aggregating on
-       xxhash64(gram) shuffles 8-byte keys. Nothing persisted: the
-       full span frame is ~doc_len× the corpus, caching it costs more
-       than the narrow scan+explode it saves (measured r8).
-    2. candidate extraction — re-explode with strings, semi-join the
-       (measured-count broadcast) candidate hashes, and PERSIST the
-       surviving (doc_id, s, gram) rows: true-duplicate sets are small
-       in real corpora, and every downstream consumer (exact verify,
-       profile's dup counts, scrub's dup positions) now reads this
-       small cached frame instead of re-exploding the corpus — the r8
-       shape paid a third full tokenize/explode pass here.
-
-    The returned gram set stays EXACT: flags are verified on gram
-    strings; a hash collision costs a few extra candidate rows, never
-    a wrong flag.
-    """
-    # r10 (SCALE.md finding 26): the exploded span STRING frame is
-    # persisted for the build's duration — r8 measured caching as a
-    # loss against the THEN-shape (3 explode passes, string keys
-    # everywhere); re-measured against the r9 2-pass shape, the cache
-    # turns pass 2 into a cache scan and wins 30% at sf10 (184-203 s ->
-    # 130-143 s profile). DISK_ONLY, deliberately: the frame is
-    # corpus-sized, and at 16 g heap a memory-tier cache competes with
-    # the candidate aggregate's execution memory (the MEMORY_AND_DISK
-    # first cut OOMed the composed pipeline at sf10) — the cache exists
-    # to avoid a second tokenize+gram-construction pass, not to hold
-    # the corpus in RAM, and a sequential local-disk scan is exactly
-    # the 100 TB story too. Lifetime is bounded IN-SCOPE: released
-    # right after the candidate frame materializes (below), never
-    # lingering. Dropping `.persist()` restores the recompute trade.
-    from pyspark import StorageLevel
-
-    shape = os.environ.get(_DUPSPAN_SHAPE_ENV, "docfilter")
-    if shape == "posjoin":
-        return _dup_span_frames_posjoin(docs, n)
-    if shape == "docfilter":
-        return _dup_span_frames_docfilter(docs, n)
-
-    spans = docs.select(
-        "doc_id",
-        F.posexplode(_span_grams("text", n)).alias("s", "gram"),
-    ).persist(StorageLevel.DISK_ONLY)
-    gh = F.xxhash64("gram").alias("gh")
-    cand_hashes = (
-        spans.select(gh, "doc_id")
-        .groupBy("gh")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gh")
-    ).persist()
-    # finding-14 shape: the aggregate's size ESTIMATE inherits the
-    # exploded input's, so Catalyst plans the probe as an SMJ that
-    # shuffles the full ~120 B/row span frame — measured at sf10 even
-    # with the hash key. Decide from the MEASURED duplicate count
-    # instead: true-duplicate sets are small in real corpora; fall back
-    # to the shuffle join only in a pathological all-duplicates regime.
-    n_cand = cand_hashes.count()
-    ch = (
-        F.broadcast(cand_hashes) if n_cand <= 2_000_000 else cand_hashes
-    )
-    cand_spans = _linger(
-        spans.join(
-            ch,
-            F.xxhash64("gram") == F.col("gh"),
-            "left_semi",
-        ).persist()
-    )
-    dup = _linger(
-        cand_spans.groupBy("gram")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("gram")
-        .persist()
-    )
-    n_dup = dup.count()  # also materializes cand_spans' cache
-    # the candidate hash set fed only the semi-join above — release it;
-    # the big span cache dies with it (cand_spans is materialized)
-    cand_hashes.unpersist()
-    spans.unpersist()
     if n_dup <= 500_000:  # ~60 MB of gram strings — broadcastable
         dup = F.broadcast(dup)
     return cand_spans, dup
@@ -712,7 +509,7 @@ _DUP_SPAN_CTES = "\n    WITH " + _dup_span_ctes_from("documents") + "\n"
     "One shuffle counts distinct docs per span, one join flags them",
 )
 def doc_dup_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _release_lingering()
+    release_lingering()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return dup_span_profile(docs)
 
@@ -755,7 +552,7 @@ def doc_dup_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "removal is a narrow array filter — no token-level shuffle",
 )
 def doc_dup_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _release_lingering()
+    release_lingering()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return dup_span_scrub(docs)
 
@@ -1478,7 +1275,7 @@ def pipeline_clean_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_span_scrub, pack_bins) — no duplicated logic."""
     from project_graphdb_spark.operators.text_fns import quality_gate_stats
 
-    _release_lingering()
+    release_lingering()
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"
     )
@@ -1487,9 +1284,9 @@ def pipeline_clean_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the narrow (doc_id, n_tokens) stats once and BROADCAST the id
     # list (8 B/doc; measured-count guard), so no downstream consumer
     # re-tokenizes the corpus or shuffles the text column for the semi.
-    # _linger: released by the NEXT top-level call, not here — the
-    # returned plan still reads it (see _release_lingering)
-    keep_stats = _linger(
+    # lingering: released by the NEXT top-level call, not here — the
+    # returned plan still reads it
+    keep_stats = linger(
         quality_gate_stats(docs.select("doc_id", "text"))
         .filter("keep")
         .select("doc_id", "n_tokens")

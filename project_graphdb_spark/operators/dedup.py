@@ -41,7 +41,6 @@ interpreted higher-order-function form; bit-identical values, see
 from __future__ import annotations
 
 import functools
-import os
 
 import numpy as np
 import pandas as pd
@@ -723,70 +722,6 @@ def dedup_minhash_lsh_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: simhash aggregate shape (r14, VERDICT r13 ask #6): "packed" sums the
-#: 64 per-bit ±1 counters as 32 SWAR columns with two 32-bit lanes each
-#: — halving the aggregate buffer count was hypothesized to shrink the
-#: generated whole-stage method whose JIT warmup made single-pass cold
-#: readings run 2-5x steady state. Output is bit-identical (proof in
-#: _simhash_sums_packed), but the cold-session A/B (fresh process per
-#: leg, alternating, 3 reps — measurements/r14/ab_simhash_cold.json)
-#: measured NO cold-execution win: first-run medians 16.6 s (wide) vs
-#: 16.5 s (packed) at sf0.1, steady medians 5.3 vs 6.1 — so the
-#: measured-optimal "wide" r8 shape stays the DEFAULT and "packed" is
-#: the kept-runnable rejected variant (same convention as the dup-span
-#: fold kernel, finding 40).
-_SIMHASH_AGG_ENV = "SPARK_GRAFT_SIMHASH_AGG"
-
-
-def _simhash_bit(lo, hi, i):
-    """bit_i of the 64-bit md5-derived token hash, as a 0/1 bigint."""
-    src = F.shiftright(lo, i) if i < 60 else F.shiftright(hi, i - 60)
-    return src.bitwiseAND(F.lit(1)).cast("bigint")
-
-
-def _simhash_sums_packed(tok: DataFrame, lo, hi) -> DataFrame:
-    """(doc_id, simhash) via 32 two-lane SWAR sums.
-
-    Column p_j accumulates ``(bit_j << 32) + bit_(j+32)`` per token, so
-    after the sum: ones_j = p_j >> 32, ones_(j+32) = p_j & 0xFFFFFFFF.
-    No lane can carry into its neighbor: each lane holds a count of
-    1-bits over one doc's DISTINCT tokens, bounded by the token-array
-    length < 2^31 (Spark arrays are int-indexed), far below the 32-bit
-    lane width. Bit rule equivalence with the ±1 form: the wide shape
-    sets bit_i iff sum(±1) > 0, and sum(±1) = ones_i - (n - ones_i)
-    = 2*ones_i - n, so bit_i iff 2*ones_i > n — same sign test, integer
-    arithmetic only, hash-identical output (pinned by
-    test_simhash_packed_agg_identical)."""
-    lane_sums = [
-        F.sum(
-            F.shiftleft(_simhash_bit(lo, hi, j), 32)
-            + _simhash_bit(lo, hi, j + 32)
-        ).alias(f"p{j}")
-        for j in range(32)
-    ]
-    sums = tok.groupBy("doc_id").agg(
-        *lane_sums, F.count("*").alias("__n")
-    )
-    n = F.col("__n")
-
-    def ones(i: int):
-        if i < 32:
-            return F.shiftright(F.col(f"p{i}"), 32)
-        return F.col(f"p{i - 32}").bitwiseAND(F.lit(0xFFFFFFFF))
-
-    packed = functools.reduce(
-        lambda a, b: a.bitwiseOR(b),
-        [
-            F.when(
-                ones(i) * 2 > n,
-                F.shiftleft(F.lit(1).cast("bigint"), i),
-            ).otherwise(F.lit(0).cast("bigint"))
-            for i in range(64)
-        ],
-    )
-    return sums.select("doc_id", packed.alias("simhash"))
-
-
 def simhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — classic 64-bit simhash over distinct tokens.
 
@@ -803,8 +738,6 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     )
     lo = md5_int60("tok")
     hi = F.conv(F.substring(F.md5("tok"), 17, 15), 16, 10).cast("bigint")
-    if os.environ.get(_SIMHASH_AGG_ENV, "wide") == "packed":
-        return _simhash_sums_packed(tok, lo, hi)
     bit_sums = [
         F.sum(
             F.when(
@@ -1442,35 +1375,13 @@ def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster_assignments trade, the opposite of the spans frame
     from project_graphdb_spark.spark_util import lingering_checkpoint
 
-    # r12 (VERDICT r11 ask #7): an integer pair-key variant —
-    # conv(hex, 16, 10) on the 8-hex-char fp, a bijection, so the
-    # join's equivalence classes and the oracle are untouched — was
-    # built and MEASURED REJECTED (SCALE.md finding 33): interleaved
-    # sf10 A/B, 3 reps/side, raw medians 62.7 s (int) vs 64.3 s (str),
-    # calib-normalized 47.8 vs 41.1 — no win, spreads overlap; the
-    # docfilter lesson does not transfer because this join's key is
-    # already 8 chars and the cost owner is the gram-hash CPU
-    # (finding 24), which the conv() only adds to. String key stays
-    # the default; the variant remains runnable for re-measurement.
-    key_mode = os.environ.get("SPARK_GRAFT_WINNOW_PAIR_KEY", "str")
-    if key_mode not in ("str", "int"):
-        # a typo'd knob would silently re-measure the wrong shape
-        raise ValueError(
-            f"SPARK_GRAFT_WINNOW_PAIR_KEY={key_mode!r}: expected "
-            "'str' (default, measured) or 'int' (rejected variant)"
-        )
-    raw = _winnow_sels(docs)
-    if key_mode == "str":
-        sel = raw.select("doc_id", F.col("fp").alias("fpk"))
-    else:
-        sel = raw.select(
-            "doc_id", F.conv("fp", 16, 10).cast("long").alias("fpk")
-        )
-    sels = lingering_checkpoint(sel)
-    a = sels.select(F.col("doc_id").alias("doc_a"), "fpk")
-    b = sels.select(F.col("doc_id").alias("doc_b"), "fpk")
+    # the 8-hex-char string fingerprint is the join key (an integer key
+    # measured no faster: SCALE.md finding 33)
+    sels = lingering_checkpoint(_winnow_sels(docs).select("doc_id", "fp"))
+    a = sels.select(F.col("doc_id").alias("doc_a"), "fp")
+    b = sels.select(F.col("doc_id").alias("doc_b"), "fp")
     return (
-        a.join(b, "fpk")
+        a.join(b, "fp")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("bigint").alias("n_shared"))

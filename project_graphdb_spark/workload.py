@@ -58,7 +58,7 @@ def register(
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # release the PREVIOUS query's lingering persists/checkpoint
             # blocks (frames a builder persisted for its RETURNED plan
-            # — spark_util's one-slot rolling window, r10 ask #7): the
+            # — spark_util's one-slot rolling window): the
             # registry is the chokepoint every harness goes through, so
             # no query's blocks outlive the next query's start. The
             # gate (tests/test_persist_gate.py) asserts nothing else
@@ -94,110 +94,63 @@ def headline_queries() -> dict[str, QueryFn]:
 _LOADED = False
 
 # The driver's correctness gate samples the FIRST 50 registry entries in
-# insertion order. Import order used to be the only lever (r1-r7); it
-# cannot express "the 10 never-checked cypher queries but not the other
-# 32 from the same module", so the window is now an explicit priority
-# list applied after all imports: names here come first (in this order),
-# everything else keeps import order behind them. r8 window = the 37
-# queries never sampled by any r1-r7 driver window (verdict r7 "What's
-# missing" #1) + the queries newly registered this round, completing
-# driver coverage of the whole registry.
-# r9 window (VERDICT r8 ask #1): after the r8 window landed, every
-# registered query had a driver row, but 4 queries' ONLY rows were
-# stale r1 entries (one pre-fix environment crash, three pre-oracle
-# rows-only) — they lead. Then the queries whose implementation changed
-# in r9 (IVF sample-trained centroids, Q7/Q8 join reorder, dup-span /
-# winnow measurement outcomes), then the oldest-checked r2/r3/r5
-# leftovers, then the oldest big bucket (r6-latest families: agent_*,
-# g_*, corpus doc_*) to refresh the union. 50 slots = the driver's
-# sample size.
+# insertion order. The window is an explicit priority list applied after
+# all imports: names here come first (in this order), everything else
+# keeps import order behind them. Rule: the 50 registered names with the
+# oldest latest driver row, sorted by (latest CORRECTNESS_r*.json round,
+# name), so every query cycles through the window
+# (tests/test_window_rotation.py checks the staleness bound).
 _WINDOW_PRIORITY: tuple[str, ...] = (
-    # r13 window (VERDICT r12 ask #1): the forward simulation's greedy
-    # plan. Forced set for r13 is EMPTY (the r12 window pre-drained the
-    # r8 cohort), so the window is: (a) the entire r9 cohort (36 rows,
-    # the oldest latest-rows after r12 — they would all become forced
-    # at r14); (b) 14 fills from the r10 cohort, chosen to be the
-    # queries this round's planned work touches (iterative-graph family
-    # whose per-superstep exchange/layout policy is changing, the
-    # dedup-cluster family whose unshareable-layout cleanup is
-    # changing, and the dup-span/pipeline shapes under measurement) so
-    # r13-changed implementations land with fresh driver rows. All r10
-    # rows are the same age, so any 14 is greedy-consistent.
-    #
-    # (a) the full r9 cohort, name order
-    "agent_correction_loop_top5",
-    "agent_customers_without_orders",
-    "agent_top5_customers",
-    "agent_total_sales_2000",
-    "ann_ivf_top10",
-    "cypher_customers_without_orders",
-    "cypher_exists_block_big_spenders",
-    "cypher_exists_building_nations",
-    "cypher_not_exists_unordered_parts",
-    "cypher_smoke",
-    "cypher_tostring_probe",
-    "cypher_union_place_names",
-    "cypher_write_node_upsert",
-    "cypher_write_rel_merge",
-    "dedup_semantic_blocked",
-    "doc_fingerprints",
-    "doc_pack_bins",
-    "doc_token_stats",
-    "emb_ivf_assign",
-    "embedding_near_dup_blocked",
-    "ev_asof_purchase_before_click",
-    "ev_interval_join_campaigns",
-    "g_customer_degree_stats",
-    "g_machinery_big_orders",
-    "g_node_counts_by_label",
-    "g_top_degree_customers",
-    "galg_degrees",
-    "galg_triangle_count",
-    "knn_join_top3_ivf",
-    "large_volume_customer_orders",
-    "late_lines_priority_by_returnflag",
-    "multimodal_frame_sample",
-    "multimodal_payload_features",
-    "rca_largest_drop_drilldown",
-    "returned_item_revenue_top20",
-    "sql_over_graph_order_priority_revenue",
-    # (b) 14 r10 fills: this round's touched implementations first
-    "galg_bfs_from_customer1",
-    "galg_kcore_3",
-    "galg_label_propagation",
-    "galg_personalized_pagerank",
-    "galg_shortest_paths",
-    "dedup_clusters",
-    "dedup_clusters_lsh",
-    "dedup_keep_best",
-    "dedup_keep_best_lsh",
-    # r13 optimization-round swap: the round's ACTUAL plan-changing
-    # rewrites (simhash canonical-bucket dedup; prenormed cosine pair
-    # verifies) take the three fill slots originally reserved for the
-    # dup-span measurement shapes, whose implementations ended the
-    # round unchanged (the fold-kernel variant was measured and
-    # rejected — OPTIMIZATION_r13.md). Same r10-age-fill greedy
-    # equivalence as the original choice; the staleness + forward
-    # simulation gates pass with the swap.
-    "dedup_simhash",
-    # r14 swap (the r12/r13 "re-oracle the round a plan changes"
-    # precedent): g_revenue_by_brand is the one query whose PLAN
-    # changed this round outside the window (spread key l_orderkey →
-    # l_partkey, 6 → 5 exchanges); it takes the slot of
-    # embedding_near_dup_pairs, which was re-oracled with a fresh r13
-    # row and ended r14 unchanged. Every other r14-touched path (galg
-    # family incl. BFS, dedup_clusters family, dedup_simhash) was
-    # already in this window.
-    "g_revenue_by_brand",
-    "knn_join_top3",
-    # r13 in-round swap: the pin-state plan rewrite landed on the
-    # pagerank/connected-components drivers too (fresh r12 rows, but
-    # the plan changed THIS round — the r12 "re-oracle the round a
-    # plan changes" precedent applies), so they take the last two fill
-    # slots from the untouched winnow pair (r10-age, greedy says any
-    # same-age fill choice is feasibility-equivalent).
-    "galg_pagerank_top20",
-    "galg_connected_components",
+    "ann_ivfpq_top10",
+    "corpus_bigram_lm",
+    "corpus_bpe_merges",
+    "customer_order_count_distribution",
+    "customer_order_gaps",
+    "cypher_revenue_per_year",
+    "cypher_shortestpath_nation_pairs",
+    "dedup_winnow",
+    "dedup_winnow_fast",
+    "distinct_customers_per_segment",
+    "doc_bigram_logprob",
+    "doc_bpe_encode",
+    "doc_dup_span_profile",
+    "doc_dup_span_scrub",
+    "doc_winnow_fingerprints",
+    "emb_label_centroid_outliers",
+    "ev_distinct_user_events",
+    "ev_funnel_conversion",
+    "ev_retention_cohorts",
+    "ev_sliding_counts",
+    "ev_top_event_paths",
+    "ev_user_counts_salted",
+    "events_ts_components",
+    "flagship_revenue_per_year",
+    "forecast_revenue_change",
+    "graph_sink_roundtrip",
+    "jsonl_roundtrip_lang_stats",
+    "lineitem_null_profile",
+    "lineitem_orderkey_contention",
+    "nation_market_share",
+    "order_value_rank_and_next",
+    "orders_status_counts_2000",
+    "part_cooccurrence_similarity",
+    "pipeline_clean_pack",
+    "shipping_priority_top10",
+    "top_supplier_quarter_revenue",
+    "volume_shipping_nation_pair",
+    "ann_cosine_top10",
+    "building_segment_brand_revenue",
+    "corpus_vocab_topk",
+    "cypher_edge_counts_by_type",
+    "cypher_match_after_with",
+    "cypher_node_counts_by_label",
+    "cypher_optional_match_order_counts",
+    "cypher_predicate_surface",
+    "cypher_region_customer_counts",
+    "cypher_status_counts",
+    "cypher_top_customers",
+    "cypher_total_node_count",
+    "cypher_value_probe",
 )
 
 

@@ -66,59 +66,6 @@ def test_dup_span_profile_handcrafted(spark):
     assert out[6] == (1, 1, 1.0)
 
 
-def test_dup_span_docfilter_shape_equivalent(spark, monkeypatch, sf_dir):
-    """The r11 candidate-doc-prefilter shape (narrow hash cache +
-    string re-explode over candidate docs only) must be row-identical
-    to the default strcache shape for BOTH consumers — on the
-    handcrafted corpus (where every doc is a candidate) and on the
-    generated documents table (where most are not)."""
-    from project_graphdb_spark.io.tables import load_table
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    docs = _docs_df(spark)
-    gen = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    monkeypatch.setenv("SPARK_GRAFT_DUPSPAN_SHAPE", "strcache")
-    base = {
-        "scrub_hand": rows(dup_span_scrub(docs, n=3)),
-        "profile_hand": rows(dup_span_profile(docs, n=3)),
-        "profile_gen": rows(dup_span_profile(gen)),
-    }
-    monkeypatch.setenv("SPARK_GRAFT_DUPSPAN_SHAPE", "docfilter")
-    assert rows(dup_span_scrub(docs, n=3)) == base["scrub_hand"]
-    assert rows(dup_span_profile(docs, n=3)) == base["profile_hand"]
-    assert rows(dup_span_profile(gen)) == base["profile_gen"]
-
-
-def test_dup_span_posjoin_shape_equivalent(spark, monkeypatch, sf_dir):
-    """r14 (VERDICT r13 ask #5): the candidate-POSITION shape (gram
-    strings rebuilt via slice+concat only at cached candidate
-    positions) must be row-identical to the docfilter default for BOTH
-    consumers, on the handcrafted corpus (every doc a candidate, spans
-    at every offset) and the generated documents table. This is the
-    'candidate-position sets verified equal' gate: any divergence in
-    the kept (doc_id, s) set or a gram-string reconstruction mismatch
-    (separator, slice off-by-one) flips a row."""
-    from project_graphdb_spark.io.tables import load_table
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    docs = _docs_df(spark)
-    gen = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    monkeypatch.setenv("SPARK_GRAFT_DUPSPAN_SHAPE", "docfilter")
-    base = {
-        "scrub_hand": rows(dup_span_scrub(docs, n=3)),
-        "profile_hand": rows(dup_span_profile(docs, n=3)),
-        "profile_gen": rows(dup_span_profile(gen)),
-    }
-    monkeypatch.setenv("SPARK_GRAFT_DUPSPAN_SHAPE", "posjoin")
-    assert rows(dup_span_scrub(docs, n=3)) == base["scrub_hand"]
-    assert rows(dup_span_profile(docs, n=3)) == base["profile_hand"]
-    assert rows(dup_span_profile(gen)) == base["profile_gen"]
-
-
 def test_dup_span_scrub_idempotent(spark):
     """Scrubbing an already-scrubbed corpus removes nothing more."""
     once = dup_span_scrub(_docs_df(spark), n=3).select(

@@ -798,45 +798,3 @@ def test_label_confusion_empty_domain_short_circuits(spark):
         out = sim.emb_label_confusion_pairs(spark, "unused")
     assert out.columns == ["label_a", "label_b", "centroid_cos"]
     assert out.count() == 0
-
-
-def test_dedup_winnow_key_modes_identical(spark, oracle_sf_dir, monkeypatch):
-    """r12 (VERDICT r11 ask #7): the string pair-key (default — the
-    int variant was measured and rejected, SCALE.md finding 33) and
-    the int shape must produce identical pairs — conv(hex,16,10) is a
-    bijection on the 8-hex-char fingerprint, so only the shuffled key
-    WIDTH changes, never the join's equivalence classes."""
-    from project_graphdb_spark.operators.dedup import dedup_winnow
-
-    def pairs():
-        return sorted(
-            (r.doc_a, r.doc_b, r.n_shared)
-            for r in dedup_winnow(spark, oracle_sf_dir).collect()
-        )
-
-    monkeypatch.setenv("SPARK_GRAFT_WINNOW_PAIR_KEY", "int")
-    p_int = pairs()
-    monkeypatch.setenv("SPARK_GRAFT_WINNOW_PAIR_KEY", "str")
-    p_str = pairs()
-    assert p_int == p_str
-    assert p_int, "empty pair set proves nothing"
-
-
-def test_simhash_packed_agg_identical(spark, sf_dir, monkeypatch):
-    """r14 (VERDICT r13 ask #6): the 32-column two-lane SWAR aggregate
-    must produce BIT-IDENTICAL signatures to the 64-column ±1 shape.
-    The sign test is exact integer arithmetic (2*ones_i > n ⟺
-    sum(±1) > 0), so any divergence is a lane-packing bug (carry,
-    shift off-by-one, bit 60-63 hi-word routing)."""
-    from project_graphdb_spark.io.tables import load_table
-    from project_graphdb_spark.operators.dedup import simhash_signatures
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_AGG", "wide")
-    wide = {r.doc_id: r.simhash for r in simhash_signatures(docs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_SIMHASH_AGG", "packed")
-    packed = {
-        r.doc_id: r.simhash for r in simhash_signatures(docs).collect()
-    }
-    assert wide == packed
-    assert len(wide) > 0

@@ -17,16 +17,19 @@ from __future__ import annotations
 import pytest
 
 from project_graphdb_spark import workload
-from project_graphdb_spark.spark_util import materialize, persistent_rdd_ids
+from project_graphdb_spark.spark_util import (
+    materialize,
+    persistent_rdd_ids,
+    release_lingering,
+)
 
 workload._ensure_loaded()
 
 
 def _release_documented_caches() -> None:
-    from project_graphdb_spark.operators.corpus import _release_lingering
     from project_graphdb_spark.operators.dedup import clear_shingle_cache
 
-    _release_lingering()
+    release_lingering()
     clear_shingle_cache()
 
 

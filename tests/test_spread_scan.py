@@ -48,19 +48,13 @@ def test_sf001_never_spreads(spark, sf_dir):
         assert "REPARTITION_BY_NUM" not in _plan(df), name
 
 
-def test_off_knob_disables(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SCAN", "off")
-    df = load_table(spark, SF01, "lineitem")
-    assert "REPARTITION_BY_NUM" not in _plan(df)
-
-
 def test_directory_input_is_never_spread(spark, tmp_path, monkeypatch):
     """Directory layouts (every at-scale dataset) must not spread even
     above the row floor — their parallelism comes from the files."""
     out = tmp_path / "lineitem.parquet"
     src = load_table(spark, SF01, "lineitem")
     src.limit(1000).repartition(4).write.parquet(str(out))
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_ROWS", "1")
+    monkeypatch.setattr(tables, "_SPREAD_MIN_ROWS", 1)
     df = load_table(spark, str(tmp_path), "lineitem")
     assert "REPARTITION_BY_NUM" not in _plan(df)
 
@@ -72,15 +66,15 @@ def test_copied_single_file_spreads_above_floor(spark, tmp_path, monkeypatch):
         os.path.join(SF01, "orders.parquet"),
         tmp_path / "orders.parquet",
     )
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_ROWS", "1")
+    monkeypatch.setattr(tables, "_SPREAD_MIN_ROWS", 1)
     df = load_table(spark, str(tmp_path), "orders")
     assert "REPARTITION_BY_NUM" in _plan(df)
 
 
 def test_min_rows_knob_is_read_per_call(spark, monkeypatch):
-    """ADVICE r13: both knobs bind at call time — raising the floor
-    after import must stop the lineitem spread."""
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_ROWS", "100000000")
+    """The row floor binds at call time — raising it after import
+    must stop the lineitem spread."""
+    monkeypatch.setattr(tables, "_SPREAD_MIN_ROWS", 100_000_000)
     df = load_table(spark, SF01, "lineitem")
     assert "REPARTITION_BY_NUM" not in _plan(df)
 
@@ -138,3 +132,14 @@ def test_layout_memo_replaces_a_rewritten_files_entry(tmp_path):
         assert tables._single_file_layout(path) == (1, rows)
         assert tables._single_file_layout(path) == (1, rows)  # memo hit
         assert list(tables._LAYOUT_MEMO) == [path]
+
+
+def test_non_parquet_file_has_no_layout(tmp_path):
+    """A file that is not parquet (garbage or 0 bytes) reads as no
+    layout, so it is never spread, and leaves one memo entry."""
+    for i, payload in enumerate((b"not a parquet footer", b"")):
+        path = tmp_path / f"x{i}.parquet"
+        path.write_bytes(payload)
+        assert tables._single_file_layout(str(path)) is None
+        assert list(tables._LAYOUT_MEMO) == [str(path)]
+        tables._LAYOUT_MEMO.clear()
