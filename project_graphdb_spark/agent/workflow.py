@@ -231,33 +231,27 @@ def _string_equality_filters(
     q: A.Query,
 ) -> list[tuple[str, str, str]]:
     """Collect (var, prop, value) for string-literal equality filters,
-    including the toLower(...) = 'v' form."""
+    including the toLower(...) = 'v' form, among the AND/OR/NOT
+    conjuncts of every WHERE."""
     found: list[tuple[str, str, str]] = []
-
-    def walk(e: A.Expr | None) -> None:
-        if e is None:
-            return
-        if isinstance(e, A.Cmp) and e.op == "=":
-            left, right = e.left, e.right
-            if isinstance(right, A.Lit) and isinstance(right.value, str):
-                target = left
-                if (
-                    isinstance(target, A.FnCall)
-                    and target.name == "tolower"
-                    and len(target.args) == 1
-                ):
-                    target = target.args[0]
-                if isinstance(target, A.Prop) and isinstance(target.base, str):
-                    found.append((target.base, target.name, right.value))
-        if isinstance(e, (A.And, A.Or)):
-            for p in e.parts:
-                walk(p)
-        if isinstance(e, A.Not):
-            walk(e.part)
-
-    for seg in q.segments:
-        walk(seg.where)
-        walk(seg.proj_where)
+    wheres = [(seg.where, seg.proj_where) for seg in q.segments]
+    conjuncts = A.walk(
+        wheres, into=lambda n: isinstance(n, (A.And, A.Or, A.Not))
+    )
+    for e in conjuncts:
+        if not (isinstance(e, A.Cmp) and e.op == "="):
+            continue
+        right = e.right
+        if isinstance(right, A.Lit) and isinstance(right.value, str):
+            target = e.left
+            if (
+                isinstance(target, A.FnCall)
+                and target.name == "tolower"
+                and len(target.args) == 1
+            ):
+                target = target.args[0]
+            if isinstance(target, A.Prop) and isinstance(target.base, str):
+                found.append((target.base, target.name, right.value))
     return found
 
 

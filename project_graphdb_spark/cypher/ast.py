@@ -8,6 +8,8 @@ and the scalar surface date()/toString()/toLower() (C10/C11/C8).
 
 from __future__ import annotations
 
+import dataclasses
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 
@@ -322,31 +324,83 @@ class Query:
     union_skip: int | None = None
     union_limit: int | None = None
 
-    # convenience accessors over the first segment / the WITH chain
-    # (the single-segment view most analysis code needs)
+    # convenience accessors over the first segment (the single-segment
+    # view most analysis code needs; whole-query scans use walk)
     @property
     def patterns(self) -> list[PathPat]:
         return self.segments[0].patterns
 
     @property
-    def optional_patterns(self) -> list[PathPat]:
-        return [p for p, _ in self.segments[0].optional_patterns]
-
-    @property
     def where(self) -> Expr | None:
         return self.segments[0].where
 
-    @property
-    def withs(self) -> list[tuple[Projection, Expr | None]]:
-        return [
-            (s.projection, s.proj_where)
-            for s in self.segments
-            if s.projection is not None
-        ]
 
-    def all_patterns(self) -> list[PathPat]:
-        return [
-            p
-            for s in self.segments
-            for p in (*s.patterns, *(op for op, _ in s.optional_patterns))
-        ]
+# -- traversal ---------------------------------------------------------------
+
+
+def walk(
+    node: object, into: Callable[[object], bool] | None = None
+) -> Iterator[object]:
+    """Every AST node under ``node`` (``node`` itself first), in
+    document order: depth-first through dataclass fields in declaration
+    order and through list and tuple elements (``Case.whens``,
+    ``NodePat.props``, ``Segment.optional_patterns``). Below a node for
+    which ``into(node)`` is false nothing is visited; that node itself
+    is still yielded. With :func:`substitute_params` (which rewrites
+    nodes), the only code that knows how the AST nests."""
+    if isinstance(node, (list, tuple)):
+        for x in node:
+            yield from walk(x, into)
+        return
+    if not dataclasses.is_dataclass(node) or isinstance(node, type):
+        return
+    yield node
+    if into is None or into(node):
+        for f in dataclasses.fields(node):
+            yield from walk(getattr(node, f.name), into)
+
+
+def substitute_params(
+    obj: object, params: dict[str, object] | None, missing: set[str]
+) -> None:
+    """Replace every Param in the AST with a literal, in place.
+
+    Generic dataclass walk: any field (or list/tuple element) that IS a
+    Param becomes Lit(params[name]); unsupplied names collect into
+    ``missing``. The compiler runs it first, so the rest of compilation
+    never sees parameters. (It rewrites fields, so it cannot be a
+    filter over :func:`walk`.)"""
+
+    def resolve(p: Param) -> Expr:
+        if params is not None and p.name in params:
+            v = params[p.name]
+            if isinstance(v, (list, tuple)):
+                # list parameters become list literals so `x IN $list`
+                # compiles through the same path as an inline list
+                return ListExpr([Lit(x) for x in v])
+            return Lit(v)
+        missing.add(p.name)
+        return Lit(None)
+
+    def map_val(v: object) -> object:
+        if isinstance(v, Param):
+            return resolve(v)
+        if isinstance(v, list):
+            return [map_val(x) for x in v]
+        if isinstance(v, tuple):
+            return tuple(map_val(x) for x in v)
+        rewrite(v)
+        return v
+
+    def rewrite(node: object) -> None:
+        if isinstance(node, (list, tuple)) or not hasattr(node, "__dict__"):
+            return
+        for name, value in list(node.__dict__.items()):
+            if isinstance(value, Param):
+                setattr(node, name, resolve(value))
+            elif isinstance(value, (list, tuple)):
+                setattr(node, name, map_val(value))
+            elif hasattr(value, "__dict__"):
+                rewrite(value)
+
+    rewrite(obj)

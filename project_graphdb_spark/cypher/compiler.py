@@ -35,7 +35,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from project_graphdb_spark.cypher import ast as A
-from project_graphdb_spark.graph.property_graph import PropertyGraph
+from project_graphdb_spark.graph.algorithms import (
+    multi_source_hops,
+    unified_edges,
+)
+from project_graphdb_spark.graph.property_graph import (
+    PropertyGraph,
+    unified_id,
+)
 
 
 class CypherAnalysisError(ValueError):
@@ -215,28 +222,15 @@ _DEC = "decimal(18,2)"
 
 def _collect_pdisc(e: object) -> list[A.FnCall]:
     """Every non-DISTINCT ``percentileDisc`` call node under ``e``
-    (generic dataclass walk, document order)."""
-    found: list[A.FnCall] = []
-
-    def walk(node: object) -> None:
-        if isinstance(node, (list, tuple)):
-            for x in node:
-                walk(x)
-            return
-        if not hasattr(node, "__dict__"):
-            return
-        if (
-            isinstance(node, A.FnCall)
-            and node.name == "percentiledisc"
-            and not node.distinct
-            and len(node.args) == 2
-        ):
-            found.append(node)
-        for value in node.__dict__.values():
-            walk(value)
-
-    walk(e)
-    return found
+    (document order)."""
+    return [
+        n
+        for n in A.walk(e)
+        if isinstance(n, A.FnCall)
+        and n.name == "percentiledisc"
+        and not n.distinct
+        and len(n.args) == 2
+    ]
 
 
 class _ExprCompiler:
@@ -545,11 +539,7 @@ class _ExprCompiler:
                 return F.lit(None)
             var = e.args[0].name
             if name in ("id", "elementid"):
-                return F.concat_ws(
-                    ":",
-                    F.lit(bound.label),
-                    F.col(f"{var}__{bound.key}").cast("string"),
-                )
+                return unified_id(bound.label, F.col(f"{var}__{bound.key}"))
             if name == "keys":
                 return F.array(*[F.lit(c) for c in bound.columns])
             return F.struct(
@@ -710,27 +700,11 @@ def _var_length_pairs(
     self-join + distinct; ``hi`` is bounded so lineage stays shallow and
     the plan remains lazy (no checkpoint needed).
     """
-    from project_graphdb_spark.graph.algorithms import unified_edges
-
-    if rel_type is not None:
-        ef = graph.edges[rel_type]
-        meta = ef.meta
-        edges = ef.df.select(
-            F.concat_ws(
-                ":", F.lit(meta.source), F.col("src").cast("string")
-            ).alias("src"),
-            F.concat_ws(
-                ":", F.lit(meta.target), F.col("dst").cast("string")
-            ).alias("dst"),
-        ).distinct()
-    else:
-        edges = unified_edges(graph)
-    if undirected:
-        edges = edges.unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        ).distinct()
+    edges = unified_edges(
+        graph,
+        undirected=undirected,
+        rel_types=None if rel_type is None else {rel_type},
+    )
 
     acc: DataFrame | None = None
     frontier = edges
@@ -756,17 +730,12 @@ def _unused_node_vars(q: A.Query) -> frozenset[str] | None:
     None (elide nothing) when a bare ``*`` projection makes every
     variable implicitly referenced.
 
-    Generic dataclass walk, so new AST node types are conservative by
-    construction: an unknown expression's Var leaves are still found by
-    field recursion."""
-    import dataclasses as _dc
-
+    Walks every AST node, so new AST node types are conservative by
+    construction: an unknown expression's Var leaves are still found."""
     used: set[str] = set()
     occurrences: dict[str, int] = {}
     star = False
-
-    def walk(x) -> None:
-        nonlocal star
+    for x in A.walk(q):
         if isinstance(x, A.Var):
             used.add(x.name)
         elif isinstance(x, A.Prop) and isinstance(x.base, str):
@@ -780,13 +749,6 @@ def _unused_node_vars(q: A.Query) -> frozenset[str] | None:
             star = True  # RETURN/WITH * — everything is referenced
         elif isinstance(x, A.PathPat) and x.path_var:
             used.add(x.path_var)
-        if _dc.is_dataclass(x) and not isinstance(x, type):
-            for f in _dc.fields(x):
-                walk(getattr(x, f.name))
-        elif isinstance(x, (list, tuple)):
-            for item in x:
-                walk(item)
-    walk(q)
     if star:
         return None
     return frozenset(
@@ -858,6 +820,13 @@ def _bind_patterns(
             dict.fromkeys(l for l in node.extra_labels if l != node.label)
         )
 
+    def known_label(p: A.NodePat) -> str | None:
+        """The label a pattern node resolves to so far: its bound
+        variable's label, else its own (None when unlabeled)."""
+        if p.var and p.var in vars:
+            return vars[p.var].label
+        return p.label
+
     def conj_attach(v: str, p: A.NodePat) -> None:
         """Apply a conjunctive pattern's extra labels to an ALREADY
         BOUND node variable: each extra label intersects (inner
@@ -900,9 +869,7 @@ def _bind_patterns(
             key = graph.schema.node(label).key
             frames.append(
                 frame.select(
-                    F.concat_ws(
-                        ":", F.lit(label), F.col(key).cast("string")
-                    ).alias(f"{var}__id"),
+                    unified_id(label, F.col(key)).alias(f"{var}__id"),
                     F.lit(label).alias(f"{var}__label"),
                 )
             )
@@ -996,16 +963,8 @@ def _bind_patterns(
             F.col("dst").alias(f"{tag}__dst"),
         )
         src_b, dst_b = vars[src_var], vars[dst_var]
-        src_id = F.concat_ws(
-            ":",
-            F.lit(src_b.label),
-            F.col(f"{src_var}__{src_b.key}").cast("string"),
-        )
-        dst_id = F.concat_ws(
-            ":",
-            F.lit(dst_b.label),
-            F.col(f"{dst_var}__{dst_b.key}").cast("string"),
-        )
+        src_id = unified_id(src_b.label, F.col(f"{src_var}__{src_b.key}"))
+        dst_id = unified_id(dst_b.label, F.col(f"{dst_var}__{dst_b.key}"))
         assert df is not None
         df = df.join(
             pairs,
@@ -1022,12 +981,8 @@ def _bind_patterns(
             meta = ef.meta
             frames.append(
                 ef.df.select(
-                    F.concat_ws(
-                        ":", F.lit(meta.source), F.col("src").cast("string")
-                    ).alias(f"{var}__src"),
-                    F.concat_ws(
-                        ":", F.lit(meta.target), F.col("dst").cast("string")
-                    ).alias(f"{var}__dst"),
+                    unified_id(meta.source, F.col("src")).alias(f"{var}__src"),
+                    unified_id(meta.target, F.col("dst")).alias(f"{var}__dst"),
                     F.lit(rel_type).alias(f"{var}__type"),
                 )
             )
@@ -1052,11 +1007,7 @@ def _bind_patterns(
             # source order preserved (dedup only): the corrector's
             # textual repair replaces the chain as the error prints it,
             # so the printed chain must match the query text
-            extras = list(
-                dict.fromkeys(
-                    l for l in node.extra_labels if l != node.label
-                )
-            )
+            extras = conj_extras(node)
             if not extras:
                 continue
             if (
@@ -1173,12 +1124,7 @@ def _bind_patterns(
                 # correction loop repairs it), matching the
                 # direction-correction philosophy of resolving what the
                 # schema determines and erroring on what it doesn't.
-                def _known(p: A.NodePat) -> str | None:
-                    if p.var and p.var in vars:
-                        return vars[p.var].label
-                    return p.label
-
-                lp, ln = _known(prev), _known(node_pat)
+                lp, ln = known_label(prev), known_label(node_pat)
                 cands = []
                 for t, ed in graph.edges.items():
                     m = ed.meta
@@ -1226,12 +1172,7 @@ def _bind_patterns(
                     if meta_u.source == meta_u.target:
                         symmetric = True
                     else:
-                        def _known(p: A.NodePat) -> str | None:
-                            if p.var and p.var in vars:
-                                return vars[p.var].label
-                            return p.label
-
-                        lp, ln = _known(prev), _known(node_pat)
+                        lp, ln = known_label(prev), known_label(node_pat)
                         edge_pat.reversed = (
                             lp == meta_u.target or ln == meta_u.source
                         )
@@ -1348,16 +1289,8 @@ def _bind_patterns(
                     edge_pat.rel_type,
                     symmetric,
                     F.lit(edge_pat.rel_type),
-                    F.concat_ws(
-                        ":",
-                        F.lit(meta.source),
-                        F.col(f"{edge_var}__src").cast("string"),
-                    ),
-                    F.concat_ws(
-                        ":",
-                        F.lit(meta.target),
-                        F.col(f"{edge_var}__dst").cast("string"),
-                    ),
+                    unified_id(meta.source, F.col(f"{edge_var}__src")),
+                    unified_id(meta.target, F.col(f"{edge_var}__dst")),
                 )
             )
             assert df is not None
@@ -1461,8 +1394,6 @@ def _attach_shortest_path(
     (inline props / pre-bound variables make the left side selective in
     the observed query shapes).
     """
-    from project_graphdb_spark.graph.algorithms import multi_source_hops
-
     errors: list[str] = []
     edge = pat.edges[0]
     left, right = pat.nodes
@@ -1479,28 +1410,15 @@ def _attach_shortest_path(
         )
 
     # edge frame in the unified id space, restricted to the rel type
-    if edge.rel_type is not None:
-        if edge.rel_type not in graph.edges:
-            raise CypherAnalysisError(
-                [f"unknown relationship type {edge.rel_type!r}"]
-            )
-        ef = graph.edges[edge.rel_type]
-        frame = ef.df.select(
-            F.concat_ws(
-                ":", F.lit(ef.meta.source), F.col("src").cast("string")
-            ).alias("src"),
-            F.concat_ws(
-                ":", F.lit(ef.meta.target), F.col("dst").cast("string")
-            ).alias("dst"),
-        ).distinct()
-    else:
-        from project_graphdb_spark.graph.algorithms import unified_edges
-
-        frame = unified_edges(graph)
-    if edge.undirected:
-        frame = frame.unionByName(
-            frame.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
+    if edge.rel_type is not None and edge.rel_type not in graph.edges:
+        raise CypherAnalysisError(
+            [f"unknown relationship type {edge.rel_type!r}"]
+        )
+    frame = unified_edges(
+        graph,
+        undirected=edge.undirected,
+        rel_types=None if edge.rel_type is None else {edge.rel_type},
+    )
 
     def endpoint(node: A.NodePat) -> tuple[str, str, DataFrame, str]:
         """(var, label, frame with var__cols + uid col, uid_col)."""
@@ -1533,9 +1451,7 @@ def _attach_shortest_path(
         uid = f"{var}__uid"
         out = nf.select(
             *[F.col(c).alias(f"{var}__{c}") for c in nf.columns],
-            F.concat_ws(
-                ":", F.lit(label), F.col(node_def.key).cast("string")
-            ).alias(uid),
+            unified_id(label, F.col(node_def.key)).alias(uid),
         )
         return var, label, out, uid
 
@@ -1596,22 +1512,7 @@ def _attach_shortest_path(
 
 
 def _contains_pattern_pred(e: A.Expr) -> bool:
-    if isinstance(e, A.PatternPred):
-        return True
-    for child in getattr(e, "__dict__", {}).values():
-        if isinstance(child, A.Expr) and _contains_pattern_pred(child):
-            return True
-        if isinstance(child, list) and any(
-            isinstance(c, A.Expr) and _contains_pattern_pred(c)
-            for c in child
-        ):
-            return True
-        if isinstance(child, tuple) and any(
-            isinstance(c, A.Expr) and _contains_pattern_pred(c)
-            for c in child
-        ):
-            return True
-    return False
+    return any(isinstance(n, A.PatternPred) for n in A.walk(e))
 
 
 def _extract_pattern_preds(
@@ -1670,8 +1571,6 @@ def _correlated_subframe(
     and return (frame, correlation key columns) — the keys are the
     shared node variables\' key columns, present under the same names
     in both the subframe and the outer frame."""
-    import dataclasses
-
     errors: list[str] = []
     # fill unlabeled shared node endpoints from the outer binding so
     # the subpattern resolves to the same node frame (and key column)
@@ -1998,29 +1897,10 @@ def _apply_call_subquery(
 
 def _collect_pattern_counts(exprs: list[A.Expr]) -> list[A.PatternCount]:
     """Every PatternCount node in the given expression trees (document
-    order)."""
-    found: list[A.PatternCount] = []
-
-    def walk(e: A.Expr) -> None:
-        if isinstance(e, A.PatternCount):
-            found.append(e)
-            return  # nested COUNT{} inside a COUNT{} WHERE unsupported
-        for child in getattr(e, "__dict__", {}).values():
-            if isinstance(child, A.Expr):
-                walk(child)
-            elif isinstance(child, (list, tuple)):
-                for c in child:
-                    if isinstance(c, A.Expr):
-                        walk(c)
-                    elif isinstance(c, tuple):
-                        for cc in c:
-                            if isinstance(cc, A.Expr):
-                                walk(cc)
-
-    for e in exprs:
-        if e is not None:
-            walk(e)
-    return found
+    order; a nested COUNT{} inside a COUNT{} WHERE is unsupported, so
+    the walk stops at each block)."""
+    blocks = A.walk(exprs, into=lambda n: not isinstance(n, A.PatternCount))
+    return [n for n in blocks if isinstance(n, A.PatternCount)]
 
 
 def _attach_pattern_counts(
@@ -2183,22 +2063,11 @@ def _expr_vars(e: object) -> set[str]:
     CONSERVATIVE direction for the pushdown's eligibility test (a
     spurious name can only make a query ineligible, never mis-push)."""
     out: set[str] = set()
-
-    def walk(node: object) -> None:
-        if isinstance(node, A.Prop) and isinstance(node.base, str):
-            out.add(node.base)
-            return
-        if isinstance(node, A.Var):
-            out.add(node.name)
-            return
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            for f in dataclasses.fields(node):
-                walk(getattr(node, f.name))
-        elif isinstance(node, (list, tuple)):
-            for item in node:
-                walk(item)
-
-    walk(e)
+    for n in A.walk(e):
+        if isinstance(n, A.Prop) and isinstance(n.base, str):
+            out.add(n.base)
+        elif isinstance(n, A.Var):
+            out.add(n.name)
     return out
 
 
@@ -2206,21 +2075,11 @@ def _agg_calls(e: object) -> list[A.FnCall]:
     """Top-level aggregate FnCalls of an expression (no descent into an
     aggregate's own arguments — nested aggregates are invalid Cypher
     and fail later in the generic path)."""
-    out: list[A.FnCall] = []
 
-    def walk(node: object) -> None:
-        if isinstance(node, A.FnCall) and node.name in _AGG_FNS:
-            out.append(node)
-            return
-        if dataclasses.is_dataclass(node) and not isinstance(node, type):
-            for f in dataclasses.fields(node):
-                walk(getattr(node, f.name))
-        elif isinstance(node, (list, tuple)):
-            for item in node:
-                walk(item)
+    def is_agg(n: object) -> bool:
+        return isinstance(n, A.FnCall) and n.name in _AGG_FNS
 
-    walk(e)
-    return out
+    return [n for n in A.walk(e, into=lambda n: not is_agg(n)) if is_agg(n)]
 
 
 def _try_agg_pushdown(
@@ -2541,49 +2400,37 @@ def _project(
     return out, {n for _, n in flat_items}, kept
 
 
-def _substitute_params(
-    obj: object, params: dict[str, object] | None, missing: set[str]
-) -> None:
-    """Replace every A.Param in the AST with a literal, in place.
+def _order_by(
+    df: DataFrame,
+    order: list[A.OrderKey],
+    items: list[A.Item],
+    scope: _Scope,
+    exact_decimal_sums: bool,
+) -> DataFrame:
+    """Sort a projected frame by WITH/RETURN ORDER BY keys.
 
-    Generic dataclass walk: any field (or list/tuple element) that IS a
-    Param becomes Lit(params[name]); unsupplied names collect into
-    ``missing``. Runs before compilation so the rest of the compiler
-    never sees parameters."""
-
-    def resolve(p: A.Param) -> A.Expr:
-        if params is not None and p.name in params:
-            v = params[p.name]
-            if isinstance(v, (list, tuple)):
-                # list parameters become list literals so `x IN $list`
-                # compiles through the same path as an inline list
-                return A.ListExpr([A.Lit(x) for x in v])
-            return A.Lit(v)
-        missing.add(p.name)
-        return A.Lit(None)
-
-    def map_val(v: object) -> object:
-        if isinstance(v, A.Param):
-            return resolve(v)
-        if isinstance(v, list):
-            return [map_val(x) for x in v]
-        if isinstance(v, tuple):
-            return tuple(map_val(x) for x in v)
-        walk(v)
-        return v
-
-    def walk(node: object) -> None:
-        if isinstance(node, (list, tuple)) or not hasattr(node, "__dict__"):
-            return
-        for field, value in list(node.__dict__.items()):
-            if isinstance(value, A.Param):
-                setattr(node, field, resolve(value))
-            elif isinstance(value, (list, tuple)):
-                setattr(node, field, map_val(value))
-            elif hasattr(value, "__dict__"):
-                walk(value)
-
-    walk(obj)
+    A key identical to a projected item resolves to that item's output
+    column (Neo4j allows re-stating the aggregate instead of its alias;
+    dataclass equality gives exact structural matching) — but only when
+    the item was flattened to a real column: a passed-through node var
+    (bare Var, no alias) keeps only its n__* columns, so it falls
+    through to compiling the key against ``scope``."""
+    comp = _ExprCompiler(scope, exact_decimal_sums)
+    keys = []
+    for ok in order:
+        col = None
+        for item in items:
+            if ok.expr == item.expr:
+                name = item.out_name().replace(".", "_")
+                if name in df.columns:
+                    col = F.col(name)
+                break
+        if col is None:
+            col = comp.compile(ok.expr)
+        keys.append(col.asc() if ok.ascending else col.desc())
+    if scope.errors:
+        raise CypherAnalysisError(scope.errors)
+    return df.orderBy(*keys)
 
 
 def compile_cypher(
@@ -2601,7 +2448,7 @@ def compile_cypher(
     # Query object against a different graph without stale resolutions
     q = parse(query) if isinstance(query, str) else copy.deepcopy(query)
     missing: set[str] = set()
-    _substitute_params(q, params, missing)
+    A.substitute_params(q, params, missing)
     if missing:
         raise CypherAnalysisError(
             [f"parameter ${name} not supplied" for name in sorted(missing)]
@@ -2777,27 +2624,10 @@ def compile_cypher(
             )
             scope = _Scope(vars or None, flat or None, df)
             if seg.proj_order:
-                ocomp = _ExprCompiler(scope, exact_decimal_sums)
-                keys = []
-                for ok in seg.proj_order:
-                    col = None
-                    for item in seg.projection.items:
-                        if ok.expr == item.expr:
-                            # output-column shortcut only when the item
-                            # was flattened to a real column; a
-                            # passed-through node var (bare Var, no
-                            # alias) keeps only its n__* columns, so
-                            # fall through to the scope resolver
-                            name = item.out_name().replace(".", "_")
-                            if name in df.columns:
-                                col = F.col(name)
-                            break
-                    if col is None:
-                        col = ocomp.compile(ok.expr)
-                    keys.append(col.asc() if ok.ascending else col.desc())
-                if scope.errors:
-                    raise CypherAnalysisError(scope.errors)
-                df = df.orderBy(*keys)
+                df = _order_by(
+                    df, seg.proj_order, seg.projection.items, scope,
+                    exact_decimal_sums,
+                )
             if seg.proj_skip is not None:
                 df = df.offset(seg.proj_skip)
             if seg.proj_limit is not None:
@@ -2829,28 +2659,10 @@ def compile_cypher(
     )
 
     if q.order_by:
-        out_scope = _Scope(None, out_names, df)
-        ocomp = _ExprCompiler(out_scope, exact_decimal_sums)
-        keys = []
-        for ok in q.order_by:
-            # ORDER BY <expr identical to a projected item> resolves to
-            # that item's output column (Neo4j allows re-stating the
-            # aggregate instead of its alias); dataclass equality gives
-            # exact structural matching
-            col = None
-            for item in q.ret.items:
-                if ok.expr == item.expr:
-                    # same flattened-column guard as the WITH path
-                    name = item.out_name().replace(".", "_")
-                    if name in df.columns:
-                        col = F.col(name)
-                    break
-            if col is None:
-                col = ocomp.compile(ok.expr)
-            keys.append(col.asc() if ok.ascending else col.desc())
-        if out_scope.errors:
-            raise CypherAnalysisError(out_scope.errors)
-        df = df.orderBy(*keys)
+        df = _order_by(
+            df, q.order_by, q.ret.items, _Scope(None, out_names, df),
+            exact_decimal_sums,
+        )
     if q.skip is not None:
         df = df.offset(q.skip)
     if q.limit is not None:

@@ -4,53 +4,17 @@ The reference deterministically flips generated-Cypher edge directions
 to fit the schema before execution (reference:
 final/langraph_neo4j3.py:299-306,326-331 — LangChain's
 CypherQueryCorrector). Ours operates on the parsed AST: for each edge
-whose (source-label, target-label) pair contradicts the catalog but
-matches when flipped, flip the pattern's arrow. Unknown types/labels
-are left for the validator to report.
+of every pattern in the query (MATCH and OPTIONAL MATCH, CALL bodies,
+UNION arms, EXISTS{}/COUNT{} anywhere in an expression) whose
+(source-label, target-label) pair contradicts the catalog but matches
+when flipped, flip the pattern's arrow. Unknown types/labels are
+left for the validator to report.
 """
 
 from __future__ import annotations
 
 from project_graphdb_spark.cypher import ast as A
 from project_graphdb_spark.graph.property_graph import PropertyGraph
-
-
-def _pattern_preds(e: A.Expr | None) -> list[A.PathPat]:
-    """PathPats inside exists() pattern predicates of a WHERE tree."""
-    if e is None:
-        return []
-    found: list[A.PathPat] = []
-    if isinstance(e, A.PatternPred):
-        found.append(e.pattern)
-    if isinstance(e, A.PatternCount):
-        # COUNT { pattern [WHERE ...] } — pattern is a PathPat, not an
-        # Expr child, so the generic walk below never reaches it (the
-        # WHERE is an Expr field and is walked normally)
-        found.append(e.pattern)
-    for child in getattr(e, "__dict__", {}).values():
-        if isinstance(child, A.Expr):
-            found.extend(_pattern_preds(child))
-        elif isinstance(child, (list, tuple)):
-            for c in child:
-                if isinstance(c, A.Expr):
-                    found.extend(_pattern_preds(c))
-    return found
-
-
-def _all_patterns(query: A.Query) -> list[A.PathPat]:
-    pats = list(query.all_patterns())
-    for seg in query.segments:
-        pats.extend(_pattern_preds(seg.where))
-        pats.extend(_pattern_preds(seg.proj_where))
-        if seg.projection is not None:
-            for item in seg.projection.items:
-                pats.extend(_pattern_preds(item.expr))
-    if query.ret is not None:
-        for item in query.ret.items:
-            pats.extend(_pattern_preds(item.expr))
-    for arm, _ in query.unions:
-        pats.extend(_all_patterns(arm))
-    return pats
 
 
 def _var_labels(patterns: list[A.PathPat]) -> dict[str, str]:
@@ -66,12 +30,13 @@ def correct_directions(graph: PropertyGraph, query: A.Query) -> list[str]:
     """Flip mis-directed edges in place; returns descriptions of the
     corrections applied (empty = nothing to fix)."""
     notes: list[str] = []
-    labels = _var_labels(_all_patterns(query))
+    patterns = [n for n in A.walk(query) if isinstance(n, A.PathPat)]
+    labels = _var_labels(patterns)
 
     def label_of(node: A.NodePat, fallback: str | None) -> str | None:
         return node.label or (labels.get(node.var) if node.var else None) or fallback
 
-    for pat in _all_patterns(query):
+    for pat in patterns:
         for i, edge in enumerate(pat.edges):
             if edge.rel_type not in graph.edges:
                 continue

@@ -46,7 +46,10 @@ from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from project_graphdb_spark.graph.property_graph import PropertyGraph
+from project_graphdb_spark.graph.property_graph import (
+    PropertyGraph,
+    unified_id,
+)
 from project_graphdb_spark.spark_util import (
     CKPT_LOCK,
     linger_ids,
@@ -448,9 +451,7 @@ def unified_vertices(graph: PropertyGraph) -> DataFrame:
         key = graph.schema.node(label).key
         frames.append(
             df.select(
-                F.concat_ws(
-                    ":", F.lit(label), F.col(key).cast("string")
-                ).alias("id")
+                unified_id(label, F.col(key)).alias("id")
             )
         )
     out = frames[0]
@@ -472,12 +473,8 @@ def unified_edges(
             continue
         meta = ef.meta
         e = ef.df.select(
-            F.concat_ws(
-                ":", F.lit(meta.source), F.col("src").cast("string")
-            ).alias("src"),
-            F.concat_ws(
-                ":", F.lit(meta.target), F.col("dst").cast("string")
-            ).alias("dst"),
+            unified_id(meta.source, F.col("src")).alias("src"),
+            unified_id(meta.target, F.col("dst")).alias("dst"),
         )
         frames.append(e)
     out = frames[0]
@@ -525,7 +522,7 @@ def _pin_state(state: DataFrame) -> DataFrame:
     plus ReusedExchanges. REPARTITION_BY_NUM is exempt from AQE
     coalescing, so the partitions stay co-partitioned with the bucketed
     edge layout. The null-filter is a no-op semantically: vertex ids
-    are ``concat_ws``-built (never null) in every caller.
+    are ``unified_id``-built (never null) in every caller.
 
     Only the rank loop pins: its state has three consumers per
     superstep and pinning measured faster there, while the

@@ -24,13 +24,22 @@ from __future__ import annotations
 import functools
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from project_graphdb_spark.schema.graph_schema import (
     GraphSchema,
     RelationshipDef,
 )
+
+
+def unified_id(label: str, key: Column) -> Column:
+    """A node's id in the unified ``Label:key`` space — the one vertex-id
+    domain that Cypher ``id()``, variable-length and shortestPath joins,
+    relationship uniqueness and the graph algorithms all join on. Every
+    builder of that id calls this, so equal ids are equal expressions
+    (same analyzed plans, same edge-layout cache keys)."""
+    return F.concat_ws(":", F.lit(label), key.cast("string"))
 
 
 @dataclass

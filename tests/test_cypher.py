@@ -11,7 +11,7 @@ from project_graphdb_spark.cypher import (
     correct_directions,
     parse,
 )
-from project_graphdb_spark.cypher.ast import Cmp, FnCall, Prop
+from project_graphdb_spark.cypher.ast import Case, Cmp, FnCall, Lit, Prop, walk
 from project_graphdb_spark.cypher.compiler import validate_cypher
 from project_graphdb_spark.cypher.parser import CypherSyntaxError
 from project_graphdb_spark.graph.builder import tpch_graph
@@ -1899,6 +1899,71 @@ def test_corrector_scans_return_position_count(spark, sf_dir):
     assert any("PLACED_BY" in note for note in notes)
     rows = compile_cypher(g, q).collect()
     assert len(rows) == 5
+
+
+@pytest.mark.parametrize(
+    "template",
+    [
+        pytest.param(
+            "MATCH (c:Customer) "
+            "WHERE CASE WHEN COUNT { (c)%s(o:Orders) } > 15 "
+            "THEN true ELSE false END "
+            "RETURN c.c_custkey AS k ORDER BY k",
+            id="count-in-case-in-where",
+        ),
+        pytest.param(
+            "MATCH (c:Customer) "
+            "RETURN c.c_custkey AS k, "
+            "CASE WHEN COUNT { (c)%s(o:Orders) } > 15 "
+            "THEN 'many' ELSE 'few' END AS band "
+            "ORDER BY k",
+            id="count-in-case-in-return",
+        ),
+        pytest.param(
+            "MATCH (c:Customer) "
+            "CALL { WITH c MATCH (c)%s(o:Orders) RETURN count(o) AS n } "
+            "RETURN c.c_custkey AS k, n ORDER BY k",
+            id="correlated-call-body",
+        ),
+    ],
+)
+def test_corrector_scans_nested_positions(spark, sf_dir, template):
+    """A reversed arrow is flipped wherever its pattern sits: a COUNT{}
+    under CASE WHEN (WHERE or RETURN) and a correlated CALL{} body.
+    The corrected query returns the rows of the same query written
+    with the schema's direction."""
+    g = tpch_graph(spark, sf_dir)
+    q = parse(template % "-[:PLACED_BY]->")
+    notes = correct_directions(g, q)
+    assert any("PLACED_BY" in note for note in notes)
+    forward = parse(template % "<-[:PLACED_BY]-")
+    assert correct_directions(g, forward) == []
+    got = compile_cypher(g, q).collect()
+    assert got and got == compile_cypher(g, forward).collect()
+
+
+def test_ast_walk_order_tuples_and_into():
+    q = parse(
+        "MATCH (c:Customer {c_name: 'x'}) "
+        "RETURN CASE WHEN c.c_acctbal > 1 THEN 'hi' ELSE 'lo' END AS band, "
+        "count(c.c_custkey) AS n"
+    )
+    nodes = list(walk(q))
+    assert nodes[0] is q
+    # document order, through the (prop, expr) tuples of NodePat.props
+    # and the (when, then) tuples of Case.whens
+    assert [n.value for n in nodes if isinstance(n, Lit)] == [
+        "x", 1, "hi", "lo",
+    ]
+    assert [n.name for n in nodes if isinstance(n, Prop)] == [
+        "c_acctbal", "c_custkey",
+    ]
+    # into=False stops descent below the node; the node itself and
+    # its siblings are still visited
+    cut = list(walk(q, into=lambda n: not isinstance(n, Case)))
+    assert sum(isinstance(n, Case) for n in cut) == 1
+    assert [n.value for n in cut if isinstance(n, Lit)] == ["x"]
+    assert [n.name for n in cut if isinstance(n, Prop)] == ["c_custkey"]
 
 
 def test_percentile_disc_skewed_group_bounded_memory(spark, sf_dir):
