@@ -37,6 +37,7 @@ unions into one id space (same construction as the oracle SQL).
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import os
 import threading
@@ -61,8 +62,8 @@ from project_graphdb_spark.spark_util import (
 # iterative algorithm, keyed by algorithm name. Every superstep ends in
 # an eager checkpoint (which also yields the stop test's count), so the
 # loop body boundaries ARE the superstep boundaries and a perf_counter
-# pair per superstep is an accurate timer. The scale-bench tooling
-# (tools/run_iterative_bench.py) and perfbench read this to report how
+# pair per superstep is an accurate timer. tools/run_scale_bench.py
+# (its ``iter_secs`` field) and perfbench read this to report how
 # superstep cost grows with data size.
 LAST_ITER_SECONDS: dict[str, list[float]] = {}
 
@@ -357,6 +358,27 @@ def release_edge_layouts(spark) -> None:
     for bucket in entries.values():
         for _plan, name in bucket:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+@contextlib.contextmanager
+def releasing_edge_layouts(spark):
+    """Run the block, then :func:`release_edge_layouts`, also when the
+    block raises: a crashed harness run (OOM and disk-full are routine
+    at sf10) must not leave cache-owned tables on disk.
+
+    When the block raised and the release raises too (a dead session),
+    the block's exception propagates with a note naming the release
+    failure; the atexit backstop then removes the table directories.
+    """
+    try:
+        yield
+    except BaseException as exc:
+        try:
+            release_edge_layouts(spark)
+        except Exception as release_exc:  # the block's error is reported
+            exc.add_note(f"release_edge_layouts also failed: {release_exc!r}")
+        raise
+    release_edge_layouts(spark)
 
 
 class Supersteps:

@@ -1,8 +1,8 @@
 """Shared block-manager/persistence helpers.
 
 One home for the py4j snippets that inspect or free persistent RDD
-state — previously copy-pasted across `graph/algorithms.py`,
-`operators/dedup.py`, and both bench runners.
+state and read stage statistics from the application status store,
+used by `graph/algorithms.py`, `operators/dedup.py` and the harnesses.
 """
 
 from __future__ import annotations
@@ -52,6 +52,39 @@ def free_all_persistent(spark, run_jvm_gc: bool = True) -> None:
     unpersist_ids(sc, persistent_rdd_ids(sc), blocking=True)
     if run_jvm_gc:
         sc._jvm.System.gc()
+
+
+def stage_shuffle_bytes(spark) -> dict[tuple[int, int], tuple[int, int]]:
+    """``(stage id, attempt) -> (shuffle read bytes, shuffle write
+    bytes)`` for every stage the application status store holds.
+
+    The store is kept with ``spark.ui.enabled=false`` and holds the
+    last ``spark.ui.retainedStages`` (1000) stages. The stages a run
+    added are the keys missing before it. The listener bus is drained
+    first, so the stages of a job that just returned are in the list.
+    """
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jvm = sc._jvm
+    # stageList(statuses, details, withSummaries, quantiles, taskStatus):
+    # an empty status list selects every stage
+    stages = jsc.statusStore().stageList(
+        jvm.java.util.ArrayList(),
+        False,
+        False,
+        sc._gateway.new_array(jvm.double, 0),
+        jvm.java.util.ArrayList(),
+    )
+    out = {}
+    it = stages.iterator()
+    while it.hasNext():
+        s = it.next()
+        out[(s.stageId(), s.attemptId())] = (
+            s.shuffleReadBytes(),
+            s.shuffleWriteBytes(),
+        )
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -15,13 +15,27 @@ import project_graphdb_spark
 
 #: cores, driver heap, data directory, calibration-anchor directory
 DEPLOYMENT_KNOBS = {"CPUS", "DRIVER_MEM", "SF_DIR", "CALIB_DIR"}
+#: cores, data directory, bench.py's detail sidecar path
+HARNESS_KNOBS = {"CPUS", "SF_DIR", "BENCH_DETAIL"}
+
+
+def _knobs(paths) -> set[str]:
+    return {
+        m.group(1)
+        for path in paths
+        for m in re.finditer(r"SPARK_GRAFT_([A-Z_]+)", path.read_text())
+    }
 
 
 def test_package_env_knobs_are_deployment_settings_only():
     root = pathlib.Path(project_graphdb_spark.__file__).parent
-    found = {
-        m.group(1)
-        for path in root.rglob("*.py")
-        for m in re.finditer(r"SPARK_GRAFT_([A-Z_]+)", path.read_text())
-    }
+    found = _knobs(root.rglob("*.py"))
     assert found == DEPLOYMENT_KNOBS, sorted(found ^ DEPLOYMENT_KNOBS)
+
+
+def test_harness_env_knobs_are_deployment_settings_only():
+    """The timing harnesses take their query subsets and pass counts as
+    arguments or constants, not as environment switches."""
+    repo = pathlib.Path(project_graphdb_spark.__file__).parent.parent
+    found = _knobs([repo / "bench.py", *(repo / "tools").glob("*.py")])
+    assert found == HARNESS_KNOBS, sorted(found ^ HARNESS_KNOBS)

@@ -888,3 +888,29 @@ def test_bfs_bucketed_level_join_has_no_edge_exchange(
         for k, v in saved.items():
             spark.conf.set(k, v)
         alg.release_edge_layouts(spark)
+
+
+def test_releasing_edge_layouts_keeps_the_block_error(monkeypatch):
+    """A release that fails on a dead session must not replace the
+    exception of the block it guards; a clean exit releases once."""
+    from py4j.protocol import Py4JError
+
+    from project_graphdb_spark.graph import algorithms as alg
+
+    calls = []
+
+    def dead_session(spark):
+        calls.append(spark)
+        raise Py4JError("session is gone")
+
+    monkeypatch.setattr(alg, "release_edge_layouts", dead_session)
+    with pytest.raises(ValueError, match="query failed") as info:
+        with alg.releasing_edge_layouts("spark"):
+            raise ValueError("query failed")
+    assert calls == ["spark"]
+    assert "session is gone" in "".join(info.value.__notes__)
+
+    monkeypatch.setattr(alg, "release_edge_layouts", calls.append)
+    with alg.releasing_edge_layouts("spark"):
+        pass
+    assert calls == ["spark", "spark"]

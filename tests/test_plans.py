@@ -264,6 +264,29 @@ def test_materialize_executes_every_output_column(spark):
     assert acc.value >= 100, "materializer pruned an output column"
 
 
+def test_stage_shuffle_bytes_from_status_store(spark):
+    """The status store lists every stage with its shuffle bytes while
+    the UI is off; a one-shuffle aggregation writes what it reads."""
+    from pyspark.sql import functions as F
+
+    from project_graphdb_spark.spark_util import (
+        materialize,
+        stage_shuffle_bytes,
+    )
+
+    assert spark.conf.get("spark.ui.enabled") == "false"
+    before = stage_shuffle_bytes(spark)
+    materialize(
+        spark.range(20_000).groupBy((F.col("id") % 97).alias("k")).count()
+    )
+    after = stage_shuffle_bytes(spark)
+    added = [v for k, v in after.items() if k not in before]
+    read = sum(r for r, _ in added)
+    written = sum(w for _, w in added)
+    assert written > 0
+    assert read == written
+
+
 def test_bench_uses_shared_materializer():
     """bench.py must materialize through spark_util.materialize so the
     column-execution guard above covers the driver's bench path too."""

@@ -3,6 +3,11 @@ the same gate the driver applies (CORRECTNESS_r{N}.json)."""
 
 from __future__ import annotations
 
+import contextlib
+import importlib.util
+import os
+import sys
+
 import pytest
 
 from project_graphdb_spark import workload
@@ -75,30 +80,56 @@ def test_window_priority_names_exist():
     )
 
 
-def test_scale_stack_names_exist():
-    """Every tools/run_scale_bench.py stack/exclusion name must be a
-    registered query — the sweep resolves them with REGISTRY[n] at
-    startup, so a typo (or a renamed query) would crash the per-round
-    scale artifact run instead of failing loudly here."""
-    import importlib.util
-    import os
-    import sys
-
+@contextlib.contextmanager
+def _scale_bench():
+    """tools/run_scale_bench.py, loaded by path (it imports at module
+    scope only stdlib + the repo package)."""
     path = os.path.join(
         os.path.dirname(__file__), "..", "tools", "run_scale_bench.py"
     )
     spec = importlib.util.spec_from_file_location("_rsb_gate", path)
     mod = importlib.util.module_from_spec(spec)
-    # the tool imports at module scope only stdlib + the repo package
     sys.modules["_rsb_gate"] = mod
     try:
         spec.loader.exec_module(mod)
-        for group in ("EXTRA_STACK", "EXCLUDED", "BIG_SF_EXCLUDED"):
+        yield mod
+    finally:
+        sys.modules.pop("_rsb_gate", None)
+
+
+def test_scale_stack_names_exist():
+    """Every tools/run_scale_bench.py stack/exclusion name must be a
+    registered query — the sweep resolves them with REGISTRY[n] at
+    startup, so a typo (or a renamed query) would crash the per-round
+    scale artifact run instead of failing loudly here."""
+    with _scale_bench() as mod:
+        groups = ("EXTRA_STACK", "ITERATIVE", "EXCLUDED", "BIG_SF_EXCLUDED")
+        for group in groups:
             names = getattr(mod, group)
             unknown = [n for n in names if n not in workload.REGISTRY]
             assert not unknown, f"{group} names not in registry: {unknown}"
+
+
+def test_scale_sweep_row_records_cold_pass_and_supersteps(
+    spark, oracle_sf_dir
+):
+    """A sweep row carries the cold pass's time and shuffle bytes and
+    the timed pass's per-superstep times."""
+    from project_graphdb_spark.graph.algorithms import release_edge_layouts
+
+    try:
+        with _scale_bench() as mod:
+            kcore = mod.measure(spark, oracle_sf_dir, "galg_kcore_3")
+            hll = mod.measure(
+                spark, oracle_sf_dir, "ev_daily_active_users_hll"
+            )
     finally:
-        sys.modules.pop("_rsb_gate", None)
+        release_edge_layouts(spark)
+    assert kcore["iter_secs"]["k_core"]
+    assert hll["shuffle_write_bytes"] > 0
+    assert hll["stages"] > 0
+    for rec in (kcore, hll):
+        assert rec["cold_sec"] > 0 and rec["sec"] > 0 and rec["rows"] > 0
 
 
 def test_workload_md_in_lockstep():

@@ -1,15 +1,30 @@
-"""Self-scaled stress run: time the headline set + the dedup/ANN stack
-at an arbitrary SF dir and report observed AQE decisions.
+"""Self-scaled stress run: time the headline set, the dedup/ANN stack,
+the sketch/exact twins and the iterative graph family at an arbitrary
+SF dir and report observed AQE decisions.
 
 Usage: python tools/run_scale_bench.py <sf_dir> [--json out.json]
+       [--only a,b,c] [--skip a,b,c]
 
 For each query: one untimed warm-up pass, one timed pass, then the
 *executed* (post-AQE) plan is scraped for the join strategies the
 runtime actually picked (broadcast vs sort-merge vs shuffled-hash, and
-whether the skew-join splitter fired). The quadratic recall-oracle
-tiers (dedup_ngram_jaccard, embedding_near_dup_pairs) are intentionally
-excluded above sf0.01 — they are test-scale verification operators, and
-excluding them is reported, not silent.
+whether the skew-join splitter fired). Each result row records:
+
+* ``sec``, ``rows``, ``sec_norm`` and the plan facts of the timed pass;
+* ``cold_sec`` of the warm-up pass, plus ``shuffle_read_bytes``,
+  ``shuffle_write_bytes`` and ``stages`` of the stages it added. Shuffle
+  bytes come from the cold pass because a warm pass can reuse its
+  shuffle map outputs (stages show SKIPPED);
+* ``iter_secs``: per-superstep wall times of the timed pass, from
+  ``graph.algorithms.LAST_ITER_SECONDS``.
+
+For a fresh JVM per query, run one invocation per ``--only`` name; its
+``cold_sec`` is then a cold single-query number.
+
+The quadratic recall-oracle tiers (dedup_ngram_jaccard,
+embedding_near_dup_pairs) are intentionally excluded above sf0.01 —
+they are test-scale verification operators, and excluding them is
+reported, not silent.
 """
 
 from __future__ import annotations
@@ -23,9 +38,11 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from project_graphdb_spark import get_spark, workload  # noqa: E402
+from project_graphdb_spark.graph import algorithms  # noqa: E402
 from project_graphdb_spark.spark_util import (  # noqa: E402
     free_all_persistent,
     materialize as _materialize,
+    stage_shuffle_bytes,
 )
 
 EXTRA_STACK = [
@@ -82,10 +99,30 @@ EXTRA_STACK = [
     "emb_label_confusion_pairs",  # r10: label-merge audit
     "corpus_vocab_topk",  # r12: exact twin of the MG face below
     "corpus_vocab_topk_approx",  # r12: Misra-Gries heavy hitters
+    # sketch vs exact twins: wall time and shuffle volume side by side
+    "ev_daily_active_users",
+    "ev_daily_active_users_hll",
+    "lineitem_quantity_percentiles",
+    "lineitem_quantity_percentiles_approx",
     # doc_bm25_topk is NOT here: its registered face binds driver-corpus
     # terms that don't exist in the scale corpus's wordNNN vocabulary
     # (0 rows). Scale-measure it via the parameterized bm25_topk core
     # with scale-corpus terms instead (SCALE.md retrieval family).
+]
+# The iterative graph family runs last and together: its queries share
+# the session's bucketed edge layouts, so the cold pass of the first
+# galg query pays the layout write and later ones hit the cache.
+ITERATIVE = [
+    "galg_degrees",  # non-iterative, same graph build
+    "galg_bfs_from_customer1",
+    "galg_connected_components",
+    "galg_shortest_paths",
+    "galg_pagerank_top20",
+    "galg_label_propagation",
+    "galg_triangle_count",
+    "galg_kcore_3",
+    "cypher_shortestpath_nation_pairs",
+    "cypher_varlength_customers_per_region",
 ]
 EXCLUDED = [
     "dedup_ngram_jaccard",
@@ -120,6 +157,8 @@ def plan_facts(df) -> dict:
         "sort_merge_joins": len(re.findall(r"SortMergeJoin", plan)),
         "shuffled_hash_joins": len(re.findall(r"ShuffledHashJoin", plan)),
         "skew_splits": len(re.findall(r"skew=true", plan)),
+        "exchanges": len(re.findall(r"\bExchange hashpartitioning", plan)),
+        "reused_exchanges": len(re.findall(r"ReusedExchange", plan)),
         # size-aware (r10): bounded-build nested-loop joins (1-row
         # scalar cutoffs, literal-keyed probes) are counted separately
         # so `cartesian` stays a trustworthy regression signal
@@ -127,18 +166,55 @@ def plan_facts(df) -> dict:
     }
 
 
-def main() -> None:
-    sf_dir = sys.argv[1]
-    out_json = None
-    if "--json" in sys.argv:
-        out_json = sys.argv[sys.argv.index("--json") + 1]
-    spark = get_spark(app_name="scale-bench")
-    workload._ensure_loaded()
+def query_list_arg(flag: str) -> list[str]:
+    """The registered query names given as ``flag a,b,c`` (empty when
+    the flag is absent)."""
+    if flag not in sys.argv:
+        return []
+    idx = sys.argv.index(flag) + 1
+    if idx >= len(sys.argv) or sys.argv[idx].startswith("--"):
+        raise SystemExit(f"{flag} needs a comma-separated query list")
+    names = sys.argv[idx].split(",")
+    unknown = [n for n in names if n not in workload.REGISTRY]
+    if unknown:
+        raise SystemExit(f"unknown queries in {flag}: {unknown}")
+    return names
 
-    # r12: host-state anchor (see project_graphdb_spark/calibration.py)
-    # — reps are INTERLEAVED through the sweep (one every few queries),
-    # because host state was measured drifting 3x within a session;
-    # sweep rows are then read raw AND calib-normalized
+
+def measure(spark, sf_dir: str, name: str) -> dict:
+    """One sweep row for ``name``: the warm-up (cold) pass, then the
+    timed pass (see the module docstring for the fields)."""
+    fn = workload.REGISTRY[name].fn
+    before = stage_shuffle_bytes(spark)
+    t0 = time.perf_counter()
+    _materialize(fn(spark, sf_dir))  # also trains/caches IVF centroids
+    cold_sec = round(time.perf_counter() - t0, 3)
+    after = stage_shuffle_bytes(spark)
+    cold = [v for k, v in after.items() if k not in before]
+    algorithms.LAST_ITER_SECONDS.clear()
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    n = _materialize(df)
+    dt = round(time.perf_counter() - t0, 3)
+    return {
+        "sec": dt,
+        "rows": n,
+        **plan_facts(df),
+        "cold_sec": cold_sec,
+        "shuffle_read_bytes": sum(r for r, _ in cold),
+        "shuffle_write_bytes": sum(w for _, w in cold),
+        "stages": len(cold),
+        "iter_secs": dict(algorithms.LAST_ITER_SECONDS),
+    }
+
+
+def sweep(spark, sf_dir: str, out_json: str | None) -> None:
+    """Measure the queries the command line selects, then the blocked
+    candidate telemetry, and write the payload to ``out_json``."""
+    # host-state anchor (see project_graphdb_spark/calibration.py): reps
+    # are interleaved through the sweep (one every few queries), because
+    # host state was measured drifting 3x within a session; sweep rows
+    # are then read raw AND calib-normalized
     from project_graphdb_spark.calibration import CalibAnchor
 
     anchor = CalibAnchor(spark)
@@ -147,26 +223,13 @@ def main() -> None:
     # dedupe while preserving order: some EXTRA_STACK members are also
     # headline queries and would otherwise run (and be timed) twice
     names = list(
-        dict.fromkeys([*workload.headline_queries(), *EXTRA_STACK])
+        dict.fromkeys(
+            [*workload.headline_queries(), *EXTRA_STACK, *ITERATIVE]
+        )
     )
-    if "--only" in sys.argv:  # focused run, e.g. --only a,b,c
-        idx = sys.argv.index("--only") + 1
-        if idx >= len(sys.argv) or sys.argv[idx].startswith("--"):
-            raise SystemExit("--only needs a comma-separated query list")
-        only = sys.argv[idx].split(",")
-        unknown = [n for n in only if n not in workload.REGISTRY]
-        if unknown:
-            raise SystemExit(f"unknown queries: {unknown}")
-        names = only
-    skipped: list[str] = []
-    if "--skip" in sys.argv:  # loud exclusion, e.g. quadratic tiers at sf10
-        idx = sys.argv.index("--skip") + 1
-        if idx >= len(sys.argv) or sys.argv[idx].startswith("--"):
-            raise SystemExit("--skip needs a comma-separated query list")
-        skipped = sys.argv[idx].split(",")
-        unknown = [n for n in skipped if n not in workload.REGISTRY]
-        if unknown:
-            raise SystemExit(f"unknown queries in --skip: {unknown}")
+    names = query_list_arg("--only") or names  # focused run
+    skipped = query_list_arg("--skip")  # loud exclusion, e.g. at sf10
+    if skipped:
         names = [n for n in names if n not in skipped]
         print(f"SKIPPED (explicit): {skipped}")
     # only pay the corpus count when a BIG_SF_EXCLUDED query is
@@ -187,41 +250,19 @@ def main() -> None:
                 "measures its volume by sampling instead"
             )
     results: dict[str, dict] = {}
-    try:
-        for qi, name in enumerate(names):
-            fn = workload.REGISTRY[name].fn
-            df = fn(spark, sf_dir)
-            _materialize(df)  # warm-up (also trains/caches IVF centroids)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = _materialize(df)
-            dt = round(time.perf_counter() - t0, 3)
-            results[name] = {"sec": dt, "rows": n, **plan_facts(df)}
-            print(f"{name:35s} {dt:8.3f}s {n:>10d} rows {results[name]}")
-            # free blocks pinned by checkpointing queries
-            # (dedup_clusters*) and force a driver-JVM GC so
-            # ContextCleaner reclaims the finished query's shuffle/
-            # broadcast state — the source of in-sequence timing drift
-            # (see spark_util.free_all_persistent)
-            free_all_persistent(spark)
-            if qi % 8 == 7:  # interleaved host-state sample
-                anchor.rep()
-    except BaseException:
-        # a crashed query (OOM/disk-full is routine at sf10) must not
-        # orphan cache-owned bucketed adjacency tables on disk — the
-        # in-memory metastore dies with the process, the parquet
-        # doesn't. The release itself can throw on a dead session and
-        # must not replace the original exception (the atexit file
-        # backstop covers that case).
-        try:
-            from project_graphdb_spark.graph.algorithms import (
-                release_edge_layouts,
-            )
-
-            release_edge_layouts(spark)
-        except Exception:
-            pass
-        raise
+    for qi, name in enumerate(names):
+        rec = results[name] = measure(spark, sf_dir, name)
+        print(
+            f"{name:35s} {rec['sec']:8.3f}s (cold {rec['cold_sec']:8.3f}s)"
+            f" {rec['rows']:>10d} rows {rec}"
+        )
+        # free blocks pinned by checkpointing queries (dedup_clusters*)
+        # and force a JVM GC so ContextCleaner reclaims the
+        # finished query's shuffle/broadcast state — the source of
+        # in-sequence timing drift (see spark_util.free_all_persistent)
+        free_all_persistent(spark)
+        if qi % 8 == 7:  # interleaved host-state sample
+            anchor.rep()
     anchor.rep()
     calib = anchor.summary()
     print("calibration:", json.dumps(calib))
@@ -261,14 +302,12 @@ def main() -> None:
         cand_stats = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
         print("blocked_candidate_stats FAILED:", cand_stats["error"])
 
-    from project_graphdb_spark.graph.algorithms import EDGE_LAYOUT_STATS
-
     payload = {
         "sf_dir": sf_dir,
         **calib,
         # writes vs cache-hits of the bucketed Pregel adjacency across
         # the whole sweep (r12: the galg family shares layouts)
-        "edge_layout_stats": dict(EDGE_LAYOUT_STATS),
+        "edge_layout_stats": dict(algorithms.EDGE_LAYOUT_STATS),
         "results": results,
         "blocked_candidate_stats": cand_stats,
         "excluded_quadratic_oracles": EXCLUDED,
@@ -278,9 +317,19 @@ def main() -> None:
         with open(out_json, "w") as f:
             json.dump(payload, f, indent=1)
     print(json.dumps({k: v["sec"] for k, v in results.items()}))
-    from project_graphdb_spark.graph.algorithms import release_edge_layouts
 
-    release_edge_layouts(spark)
+
+def main() -> None:
+    sf_dir = sys.argv[1]
+    out_json = None
+    if "--json" in sys.argv:
+        out_json = sys.argv[sys.argv.index("--json") + 1]
+    spark = get_spark(app_name="scale-bench")
+    workload._ensure_loaded()
+    # a crashed query (OOM/disk-full is routine at sf10) must not orphan
+    # cache-owned bucketed adjacency tables on disk
+    with algorithms.releasing_edge_layouts(spark):
+        sweep(spark, sf_dir, out_json)
     spark.stop()
 
 
