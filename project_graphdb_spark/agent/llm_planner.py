@@ -88,8 +88,8 @@ def _http_transport(
             try:
                 err_body = json.loads(e.read().decode("utf-8"))
                 detail = (err_body.get("error") or {}).get("message", "")
-            except Exception:
-                pass
+            except (OSError, ValueError, AttributeError):
+                pass  # unreadable body, not JSON, or JSON not an object
             raise RuntimeError(
                 f"LLM endpoint returned HTTP {e.code}"
                 + (f": {detail}" if detail else "")

@@ -176,12 +176,3 @@ class CalibAnchor:
             f">={CALIB_MIN_REPS} kept reps; median over kept reps",
         }
 
-
-def run_calibration(spark: SparkSession, reps: int = CALIB_MIN_REPS) -> dict:
-    """One-shot form for callers without a pass structure to
-    interleave with; ``summary()`` enforces the warmup/min-rep floor
-    regardless of ``reps``."""
-    anchor = CalibAnchor(spark)
-    for _ in range(reps):
-        anchor.rep()
-    return anchor.summary()

@@ -19,8 +19,8 @@ Scale rules baked into this module:
   one shard is truncated; callers split good/bad rows and route the
   corrupt ones to a dead-letter sink instead of crashing the job.
 * **Writes shard by partition.** One output file per task — the
-  natural parallel layout; compression is a knob (zstd on a real
-  cluster; default none here so the files stay inspectable).
+  natural parallel layout — written uncompressed so the files stay
+  inspectable.
 """
 
 from __future__ import annotations
@@ -87,42 +87,7 @@ def split_corrupt(
     return good, bad, df
 
 
-def read_jsonl_stream(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    keep_corrupt: bool = False,
-) -> DataFrame:
-    """Structured Streaming twin of :func:`read_jsonl`: tail a
-    directory of JSONL shards as they land. The file source records
-    processed files in the checkpoint, so ingest is exactly-once across
-    restarts; the same schema-first rule applies (Spark refuses
-    streaming schema inference outright). Same corrupt-line contract as
-    the batch scan: default drops malformed lines at the parser,
-    ``keep_corrupt=True`` surfaces them in ``_corrupt_record`` so the
-    stream can fork a dead-letter sink."""
-    if keep_corrupt:
-        return (
-            spark.readStream.schema(_with_corrupt_col(schema))
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", CORRUPT_COL)
-            .json(path)
-        )
-    return (
-        spark.readStream.schema(schema)
-        .option("mode", "DROPMALFORMED")
-        .json(path)
-    )
-
-
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compression: str | None = None,
-) -> None:
-    """Write one JSONL shard per partition (``part-*.json`` files)."""
-    w = df.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write one uncompressed JSONL shard per partition
+    (``part-*.json`` files), replacing whatever is at ``path``."""
+    df.write.mode("overwrite").json(path)

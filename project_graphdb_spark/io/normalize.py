@@ -52,15 +52,15 @@ def affinity_of(declared_type: str) -> str:
 
 
 def normalize_table(
-    df: DataFrame,
-    declared_types: dict[str, str],
-    keep_original_timestamp: bool = True,
+    df: DataFrame, declared_types: dict[str, str]
 ) -> DataFrame:
     """Apply affinity casts + timestamp explosion to a raw table.
 
     ``declared_types`` maps column name -> declared SQL type (as read from
     the source catalog, e.g. SQLite ``PRAGMA table_info``). Columns not
-    listed pass through untouched.
+    listed pass through untouched. A timestamp-affinity column gains its
+    six ``{col}_year .. {col}_second`` components and is itself kept,
+    cast to a timestamp.
     """
     out = df
     for col, declared in declared_types.items():
@@ -73,10 +73,7 @@ def normalize_table(
                 out = out.withColumn(
                     f"{col}_{suffix}", extract(ts).cast("bigint")
                 )
-            if keep_original_timestamp:
-                out = out.withColumn(col, ts)
-            else:
-                out = out.drop(col)
+            out = out.withColumn(col, ts)
         elif affinity == "bigint":
             # coerce-to-null like pd.to_numeric(errors="coerce")
             out = out.withColumn(col, F.col(col).try_cast("bigint"))
@@ -88,11 +85,3 @@ def normalize_table(
             out = out.withColumn(col, F.col(col).cast("string"))
     return out
 
-
-def explode_timestamp(df: DataFrame, col: str, drop: bool = False) -> DataFrame:
-    """Explode one timestamp column into six int component columns (B9)."""
-    out = df
-    ts = F.to_timestamp(F.col(col))
-    for suffix, extract in _COMPONENTS:
-        out = out.withColumn(f"{col}_{suffix}", extract(ts).cast("bigint"))
-    return out.drop(col) if drop else out

@@ -183,6 +183,7 @@ def ensure_engine_conf(spark: SparkSession) -> None:
     from project_graphdb_spark.session import (
         ADAPTIVE_BROADCAST_THRESHOLD,
         STATIC_BROADCAST_THRESHOLD,
+        local_cpus,
     )
 
     if spark.conf.get("spark.sql.autoBroadcastJoinThreshold") in (
@@ -201,10 +202,7 @@ def ensure_engine_conf(spark: SparkSession) -> None:
             str(ADAPTIVE_BROADCAST_THRESHOLD),
         )
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_CPUS", "32"),
-        )
+        spark.conf.set("spark.sql.shuffle.partitions", str(local_cpus()))
 
 
 def load_table(

@@ -53,6 +53,3 @@ SQL_REVENUE = (
     f" * (1 - CAST(l_discount AS {SQL_DEC}))"
 )
 
-
-def sql_exact_sum(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS {SQL_DEC})) AS DOUBLE) AS {alias}"

@@ -263,51 +263,28 @@ def _nearest_cid(cents: list[list[float]]) -> Column:
     return (-F.array_max(sims)["nc"]).alias("cid")
 
 
-def _nearest_cid_l2(cents: list[list[float]]) -> Column:
-    """L2 argmin over driver-side centroids as ONE literal expression:
-    argmin ||x-c||² = argmax (x·c − ||c||²/2) since ||x||² is constant
-    per row — the same literal-argmax shape as the cosine form, with
-    the centroid half-norms folded in driver-side. Tie-break on the
-    smallest cid (struct max over (score, -cid))."""
-    sims = F.array(
-        *[
-            F.struct(
-                _rank_sim(
-                    dot(F.col("v"), _lit_vec(cv))
-                    - F.lit(sum(x * x for x in cv) / 2.0)
-                ).alias("s"),
-                F.lit(-cid).alias("nc"),
-            )
-            for cid, cv in enumerate(cents)
-        ]
-    )
-    return (-F.array_max(sims)["nc"]).alias("cid")
-
-
 def lloyd_centroids(
     spark: SparkSession,
     emb: DataFrame,
     k: int = IVF_K,
     iters: int = IVF_LLOYD_ITERS,
-    metric: str = "cosine",
 ) -> list[list[float]]:
     """Deterministic k-means coarse quantizer → k centroid vectors.
 
     Seeds with the ``k`` lowest-``vec_id`` vectors, then runs ``iters``
     Lloyd rounds: assign every vector to its nearest centroid by
-    (rounded) cosine — or L2 with ``metric="l2"``, the standard choice
-    for PQ subspace codebooks where near-zero subvectors make cosine
-    unstable — recompute each centroid as the element-wise mean of its
-    members. Centroid components round to 6 dp so the quantizer is
-    bit-reproducible across partitionings; an emptied cluster keeps
-    its previous centroid.
+    (rounded) cosine and recompute each centroid as the element-wise
+    mean of its members. Centroid components round to 6 dp so the
+    quantizer is bit-reproducible across partitionings; an emptied
+    cluster keeps its previous centroid.
 
     Scale: the only driver-side materialization is the centroid list —
     O(k·dim) doubles per round, independent of data size (the same
     cadence Spark MLlib's KMeans uses). Each round is ONE Spark job:
-    assignment is a literal-centroid argmax expression (no join/window,
-    see :func:`_nearest_cid`) fused into a (cid, pos) mean aggregation
-    — a single narrow-map + one shuffle over the TRAINING SAMPLE, not
+    assignment is a literal-centroid argmax expression for
+    ``k <= LITERAL_K_MAX`` (no join/window, see :func:`_nearest_cid`)
+    and the Arrow probe kernel above it, fused into a (cid, pos) mean
+    aggregation — a single narrow-map + one shuffle over the TRAINING SAMPLE, not
     the corpus: past ``2 * max(64*k, 4096)`` vectors, rounds iterate a
     persisted deterministic ``xxhash64(vec_id) % mod == 0`` sample (the
     quantizer is a fixed-size model; see IVF_TRAIN_POINTS_PER_CENTROID
@@ -325,8 +302,6 @@ def lloyd_centroids(
             "lloyd_centroids: no seed vectors (vec_id < k) in the "
             "embedding frame — cannot train a quantizer on empty input"
         )
-    if metric not in ("cosine", "l2"):
-        raise ValueError(f"lloyd_centroids: unknown metric {metric!r}")
     k = len(cents)  # fewer than k seeds → shrink k, don't crash
     train, sampled = emb, False
     if iters > 0:
@@ -340,16 +315,11 @@ def lloyd_centroids(
             sampled = True
     try:
         for _ in range(iters):
-            if metric == "l2":
-                assign = _nearest_cid_l2(cents)  # k<=16 literal form only
-            else:
-                assign = (
-                    _nearest_cid(cents)
-                    if k <= LITERAL_K_MAX
-                    else F.element_at(
-                        _probe_cids_arrow(cents, 1), 1
-                    ).alias("cid")
-                )
+            assign = (
+                _nearest_cid(cents)
+                if k <= LITERAL_K_MAX
+                else F.element_at(_probe_cids_arrow(cents, 1), 1).alias("cid")
+            )
             means = (
                 train.select(assign, "v")
                 .select("cid", F.posexplode("v").alias("pos", "x"))
@@ -718,37 +688,6 @@ def embedding_near_dup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cos_sim") >= NEAR_DUP_THRESHOLD)
         .orderBy("vec_a", "vec_b")
     )
-
-
-def cosine_scores_pandas(
-    emb: DataFrame, query_vec: list[float], round_to: int = 6
-) -> DataFrame:
-    """(vec_id, cos_sim) via an Arrow-vectorized pandas UDF.
-
-    The alternative implementation path for wide vectors: NumPy matrix
-    math over Arrow batches beats per-element Catalyst folds once
-    dimensionality is large (thousands of dims); both paths are exact
-    and are equality-tested against each other. The query vector ships
-    as a closure constant — no join at all.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype="float64")
-    qn = float(np.sqrt((q * q).sum()))
-
-    def _cos(col):
-        m = np.stack(col.to_numpy())  # (batch, dim) float64
-        num = m @ q
-        den = np.sqrt((m * m).sum(axis=1)) * qn
-        return pd.Series(num / den).round(round_to)
-
-    # non-decorator form: module-level `from __future__ import
-    # annotations` would stringify hints the UDF inspector cannot eval
-    cos = pandas_udf(_cos, "double")
-    return emb.select("vec_id", cos(F.col("v")).alias("cos_sim"))
 
 
 @register(

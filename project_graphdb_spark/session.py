@@ -33,6 +33,19 @@ STATIC_BROADCAST_THRESHOLD = 16 * 1024 * 1024
 ADAPTIVE_BROADCAST_THRESHOLD = 64 * 1024 * 1024
 
 
+def local_cpus() -> int:
+    """``SPARK_GRAFT_CPUS`` (default 32): the local thread count and the
+    shuffle-partition count. Anything but a positive integer raises
+    here, naming the variable, rather than later as a master or conf
+    error."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if not (raw.isdecimal() and int(raw) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}"
+        )
+    return int(raw)
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -43,7 +56,7 @@ def get_spark(
     Any config may be overridden via ``extra_conf``. Honors
     ``SPARK_GRAFT_CPUS`` for local parallelism (default 32).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = str(local_cpus())
     if master is None:
         master = f"local[{cpus}]"
 

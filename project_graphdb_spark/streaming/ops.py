@@ -19,7 +19,7 @@ the batch-backfill twin of the streaming session_window path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -109,181 +109,6 @@ def streaming_session_counts(events: DataFrame) -> DataFrame:
             "user_id",
             "n_events",
         )
-    )
-
-
-def stateful_user_counts(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator (§2.E): running per-user event
-    count + max event time via ``applyInPandasWithState``.
-
-    This is the escape hatch for operators Spark's windowed aggregations
-    can't express (arbitrary per-key state machines). State is one tiny
-    row per user; the grouping shuffle partitions by user_id so state
-    stores scale horizontally with keys.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id bigint, n_events bigint, last_ts timestamp"
-    state_schema = "n bigint, last bigint"
-
-    def update(key, pdfs, state: GroupState):
-        n, last = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            if len(pdf):
-                last = max(last, int(pd.to_datetime(pdf["ts"]).astype("int64").max()))
-        state.update((n, last))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "last_ts": [pd.Timestamp(last, unit="ns")],
-            }
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-FUNNEL_STAGE_TYPES = ("view", "click", "purchase")
-
-
-def funnel_stage_tracker(
-    events: DataFrame, window_hours: int | None = None
-) -> DataFrame:
-    """Per-user ordered-funnel progression as a custom stateful
-    streaming operator (``applyInPandasWithState``): state is the three
-    stage entry times, advanced by the strict-after state machine the
-    batch face (`event_analytics.funnel_conversion`) computes with
-    joins — stage k enters on the first stage-k event strictly after
-    the stage-(k-1) entry, and (with ``window_hours``) within the
-    conversion window of it, mirroring the time-bounded batch face
-    ``ev_funnel_conversion_windowed`` (r11).
-
-    Each micro-batch's rows are processed in (event-time, event_id)
-    order — the same total order the batch face's (ts, event_id)
-    convention uses, so same-timestamp events are replayed
-    deterministically even if stage semantics are ever loosened from
-    strictly-after (ADVICE r10). Like the sessionization twin,
-    cross-batch exactness assumes the stream arrives in roughly
-    event-time order (the watermarked deployment regime; the
-    equivalence test stages time-sliced files). State is three longs
-    per user — horizontal in keys, constant per key.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = "user_id bigint, stage int"
-    state_schema = "t1 bigint, t2 bigint, t3 bigint"  # ns since epoch; 0 = unset
-    # the batch face's conversion window (prev < ts <= prev + w) as ns
-    win_ns = (
-        None if window_hours is None else int(window_hours) * 3_600 * 10**9
-    )
-
-    def _within(ts_ns: int, prev_ns: int) -> bool:
-        return win_ns is None or ts_ns <= prev_ns + win_ns
-
-    def update(key, pdfs, state: GroupState):
-        t1, t2, t3 = state.get if state.exists else (0, 0, 0)
-        frames = [pdf for pdf in pdfs if len(pdf)]
-        if frames:
-            rows = pd.concat(frames)
-            rows = rows.assign(
-                __ts=pd.to_datetime(rows["ts"]).astype("int64")
-            ).sort_values(["__ts", "event_id"])
-            for ts_ns, etype in zip(rows["__ts"], rows["event_type"]):
-                if t1 == 0:
-                    if etype == FUNNEL_STAGE_TYPES[0]:
-                        t1 = int(ts_ns)
-                elif t2 == 0:
-                    if (
-                        etype == FUNNEL_STAGE_TYPES[1]
-                        and ts_ns > t1
-                        and _within(ts_ns, t1)
-                    ):
-                        t2 = int(ts_ns)
-                elif t3 == 0:
-                    if (
-                        etype == FUNNEL_STAGE_TYPES[2]
-                        and ts_ns > t2
-                        and _within(ts_ns, t2)
-                    ):
-                        t3 = int(ts_ns)
-        state.update((t1, t2, t3))
-        stage = 3 if t3 else 2 if t2 else 1 if t1 else 0
-        yield pd.DataFrame({"user_id": [key[0]], "stage": [stage]})
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_upsert_nodes(
-    stream: DataFrame,
-    target_path: str,
-    checkpoint: str,
-    key: str,
-    agg_cols: dict[str, str],
-) -> "object":
-    """Continuous graph maintenance: a stream micro-batch upserts into a
-    parquet node-label directory via :func:`merge_upsert` inside
-    ``foreachBatch`` — the streaming twin of the batch graph build.
-
-    ``agg_cols`` maps output column -> aggregate ('count' | 'max' |
-    'sum') computed per key within each micro-batch before the merge.
-    Exactly-once per micro-batch comes from the checkpointed source
-    offsets; the merge itself is idempotent on the key. Returns the
-    started StreamingQuery (caller awaits/stops).
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from project_graphdb_spark.graph.builder import merge_upsert
-
-    def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        aggs = []
-        for out, kind in agg_cols.items():
-            src = out.split("__")[0]
-            if kind == "count":
-                aggs.append(F.count("*").alias(out))
-            elif kind == "max":
-                aggs.append(F.max(src).alias(out))
-            else:
-                aggs.append(F.sum(src).alias(out))
-        updates = batch.groupBy(key).agg(*aggs)
-        if os.path.exists(target_path):
-            existing = spark.read.parquet(target_path)
-            merged = merge_upsert(existing, updates, key)
-        else:
-            merged = updates
-        # write to a temp dir then swap: the read above streams from the
-        # same location we overwrite
-        tmp = target_path + f".__batch{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(
-            target_path
-        )
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

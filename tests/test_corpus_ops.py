@@ -123,47 +123,6 @@ def test_jsonl_write_shards_by_partition(spark, tmp_path):
     assert len(parts) == 4
 
 
-def test_jsonl_stream_matches_batch(spark, tmp_path):
-    """Streaming ingest of a JSONL directory produces the same
-    aggregate as the batch scan (the file source's exactly-once
-    contract over static input)."""
-    from project_graphdb_spark.io.jsonl import read_jsonl_stream
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-        ]
-    )
-    df = spark.createDataFrame(
-        [(1, "en"), (2, "en"), (3, "de")], schema=schema
-    )
-    path = str(tmp_path / "stream_shards")
-    write_jsonl(df.repartition(2), path)
-    # a malformed shard must not surface as an all-null row
-    with open(tmp_path / "stream_shards" / "bad-shard.json", "w") as f:
-        f.write("{broken\n")
-
-    agg = (
-        read_jsonl_stream(spark, path, schema)
-        .groupBy("lang")
-        .count()
-    )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("jsonl_stream_counts")
-        .outputMode("complete")
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        r.lang: r["count"]
-        for r in spark.sql("SELECT * FROM jsonl_stream_counts").collect()
-    }
-    assert got == {"en": 2, "de": 1}
-
-
 def test_doc_shuffle_shards_deterministic_and_dispersed(spark, sf_dir):
     """The shuffle is reproducible across input partitionings (a
     failed-stage retry must land every doc in the same place) and the

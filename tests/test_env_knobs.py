@@ -11,7 +11,10 @@ from __future__ import annotations
 import pathlib
 import re
 
+import pytest
+
 import project_graphdb_spark
+from project_graphdb_spark.session import local_cpus
 
 #: cores, driver heap, data directory, calibration-anchor directory
 DEPLOYMENT_KNOBS = {"CPUS", "DRIVER_MEM", "SF_DIR", "CALIB_DIR"}
@@ -39,3 +42,14 @@ def test_harness_env_knobs_are_deployment_settings_only():
     repo = pathlib.Path(project_graphdb_spark.__file__).parent.parent
     found = _knobs([repo / "bench.py", *(repo / "tools").glob("*.py")])
     assert found == HARNESS_KNOBS, sorted(found ^ HARNESS_KNOBS)
+
+
+def test_cpus_knob_is_a_positive_integer(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert local_cpus() == 32
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    assert local_cpus() == 4
+    for raw in ("abc", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+            local_cpus()

@@ -129,33 +129,6 @@ def test_ivf_quantizer_deterministic(spark, sf_dir):
     assert a == b
 
 
-def test_pandas_cosine_matches_jvm_path(spark, sf_dir):
-    from pyspark.sql import functions as F
-    from project_graphdb_spark.operators.similarity import (
-        _emb,
-        cosine,
-        cosine_scores_pandas,
-    )
-
-    emb = _emb(spark, sf_dir)
-    qv = emb.filter(F.col("vec_id") == 0).collect()[0]["v"]
-    jvm = (
-        emb.filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            F.round(
-                cosine(F.col("v"), F.array(*[F.lit(x) for x in qv])), 6
-            ).alias("cos_sim"),
-        )
-    )
-    arrow = cosine_scores_pandas(
-        emb.filter(F.col("vec_id") != 0), qv
-    )
-    got = {r["vec_id"]: r["cos_sim"] for r in arrow.collect()}
-    want = {r["vec_id"]: r["cos_sim"] for r in jvm.collect()}
-    assert got == want
-
-
 def test_stratified_sample_fractions_and_determinism(spark):
     from project_graphdb_spark.operators.text import (
         SAMPLE_FRACTIONS,

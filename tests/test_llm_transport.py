@@ -59,6 +59,9 @@ class _Handler(BaseHTTPRequestHandler):
         if step[0] == "error":
             _, code, message = step
             body = json.dumps({"error": {"message": message}}).encode()
+            step = ("raw", code, body)
+        if step[0] == "raw":
+            _, code, body = step
             self.send_response(code)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(body)))
@@ -119,15 +122,17 @@ def test_transport_extracts_http_error_message(stub_server):
         call({"model": "m", "messages": []})
 
 
-def test_transport_bad_status_without_json_body(stub_server):
+@pytest.mark.parametrize(
+    "body", [b"<html>bad gateway</html>", b"[1]"], ids=["html", "json-array"]
+)
+def test_transport_bad_status_without_json_body(stub_server, body):
+    """An error body that is not JSON, or JSON that is not an object,
+    yields the bare status with no detail."""
     base_url, state = stub_server
-    # error step with a non-JSON body: send a plain 500 by scripting an
-    # error whose message survives only when the body parses — here we
-    # exercise the fallback by pointing at a path the stub still serves
-    # but with an empty error message
-    state.script = [("error", 500, "")]
+    state.script = [("raw", 502, body)]
     call = _http_transport(base_url, "sk", timeout_s=5.0)
-    with pytest.raises(RuntimeError, match="HTTP 500"):
+    no_detail = r"^LLM endpoint returned HTTP 502$"
+    with pytest.raises(RuntimeError, match=no_detail):
         call({"model": "m", "messages": []})
 
 

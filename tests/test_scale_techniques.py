@@ -136,9 +136,11 @@ def test_calibration_anchor_fields_and_determinism(spark):
             F.count("*").alias("n"),
         ).collect()[0]
 
-    # reps=1 under-delivers on purpose: summary() must pad to the
+    # one rep under-delivers on purpose: summary() must pad to the
     # v2 floor (warmup + CALIB_MIN_REPS kept) on its own
-    out = cal.run_calibration(spark, reps=1)
+    anchor = cal.CalibAnchor(spark)
+    anchor.rep()
+    out = anchor.summary()
     assert set(out) >= {
         "calib_sec",
         "calib_reps",

@@ -1,7 +1,7 @@
 """Structured Streaming: the same transformation functions that pass the
 batch oracle gate run here against ``readStream``, plus the
 streaming-only surfaces (session_window, dropDuplicatesWithinWatermark,
-applyInPandasWithState custom state).
+stream-stream and stream-static joins, checkpoint recovery).
 
 Strategy: stage the sf0.001 events as a multi-file parquet directory,
 stream it with a memory sink, ``processAllAvailable()``, and compare the
@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from project_graphdb_spark.io.tables import load_table
 from project_graphdb_spark.streaming.ops import (
     sessionize,
-    stateful_user_counts,
     streaming_session_counts,
     tumbling_window_stats,
 )
@@ -189,27 +188,6 @@ def test_distinct_user_events_stream_matches_batch(spark, staged):
     assert got == want
 
 
-def test_stateful_user_counts(spark, staged):
-    path, batch = staged
-    stream = spark.readStream.schema(batch.schema).parquet(path)
-    name = _run_to_memory(
-        stateful_user_counts(stream), "t_state", "update"
-    )
-    # the last update per user carries the final running count
-    final = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("last_ts").alias("last_ts"),
-        )
-    )
-    want = batch.groupBy("user_id").agg(
-        F.count("*").alias("n_events"), F.max("ts").alias("last_ts")
-    )
-    assert _rows(final, "user_id") == _rows(want, "user_id")
-
-
 def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     """Stop/restart with the same checkpoint: already-committed input
     files are not reprocessed (no duplicates), new files are."""
@@ -246,58 +224,6 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == batch.count()
     assert got.select("event_id").distinct().count() == batch.count()
-
-
-def test_stream_upsert_into_node_store(spark, tmp_path):
-    """Streaming -> graph maintenance: micro-batches merge-upsert a
-    per-user node frame; a second drain with new data updates matched
-    keys and inserts new ones."""
-    from project_graphdb_spark.streaming.ops import stream_upsert_nodes
-
-    src = tmp_path / "in"
-    target = str(tmp_path / "users")
-    cp = str(tmp_path / "cp")
-    batch = load_table(spark, SF, "events")
-    half1 = batch.filter(F.col("event_id") % 2 == 0)
-    half2 = batch.filter(F.col("event_id") % 2 == 1)
-    half1.write.parquet(str(src))
-
-    def drain():
-        q = stream_upsert_nodes(
-            spark.readStream.schema(batch.schema).parquet(str(src)),
-            target,
-            cp,
-            key="user_id",
-            agg_cols={"ts__latest": "max"},
-        )
-        q.awaitTermination()
-
-    drain()
-    first = {
-        r["user_id"]: r["ts__latest"]
-        for r in spark.read.parquet(target).collect()
-    }
-    want1 = {
-        r["user_id"]: r["m"]
-        for r in half1.groupBy("user_id").agg(F.max("ts").alias("m")).collect()
-    }
-    assert first == want1
-
-    half2.write.mode("append").parquet(str(src))
-    drain()
-    final = {
-        r["user_id"]: r["ts__latest"]
-        for r in spark.read.parquet(target).collect()
-    }
-    # matched users advance to the new batch's max; the store keeps
-    # last-batch-wins MERGE semantics per column
-    want2 = {
-        r["user_id"]: r["m"]
-        for r in half2.groupBy("user_id").agg(F.max("ts").alias("m")).collect()
-    }
-    for u, ts in final.items():
-        assert ts == want2.get(u, want1.get(u))
-    assert set(final) == set(want1) | set(want2)
 
 
 def test_stream_stream_interval_join_matches_batch(spark, staged):
@@ -527,70 +453,3 @@ def test_every_streaming_faced_query_has_a_stream_twin():
     # face was dropped or stopped referencing its streaming op
     assert len(checked) >= 6, checked
 
-
-@pytest.mark.parametrize("window_hours", [None, 48])
-def test_funnel_stage_tracker_stream_matches_batch(
-    spark, tmp_path, window_hours
-):
-    """Stream twin of the ev_funnel_conversion[_windowed] batch faces:
-    the stateful per-user stage machine (funnel_stage_tracker), fed
-    time-sliced micro-batches, must reach the same per-stage user
-    counts the batch face computes with joins — for both the
-    open-ended funnel and the r11 conversion-window variant (the state
-    machine applies prev < ts <= prev + window). Files staged in
-    event-time order (the sessionization twin's regime: a realistic
-    stream arrives roughly ordered; each slice one micro-batch via
-    maxFilesPerTrigger=1)."""
-    from project_graphdb_spark.operators.event_analytics import (
-        funnel_conversion,
-    )
-    from project_graphdb_spark.streaming.ops import funnel_stage_tracker
-
-    batch = load_table(spark, SF, "events")
-    path = str(tmp_path / "events_by_time")
-    bounds = batch.selectExpr(
-        "percentile(unix_micros(ts), 0.25) q1",
-        "percentile(unix_micros(ts), 0.5) q2",
-        "percentile(unix_micros(ts), 0.75) q3",
-    ).collect()[0]
-    slices = [
-        F.unix_micros(F.col("ts")) <= bounds.q1,
-        (F.unix_micros(F.col("ts")) > bounds.q1)
-        & (F.unix_micros(F.col("ts")) <= bounds.q2),
-        (F.unix_micros(F.col("ts")) > bounds.q2)
-        & (F.unix_micros(F.col("ts")) <= bounds.q3),
-        F.unix_micros(F.col("ts")) > bounds.q3,
-    ]
-    _write_slices_mtime_ordered(batch, slices, path)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-    )
-    name = _run_to_memory(
-        funnel_stage_tracker(stream, window_hours=window_hours),
-        f"t_funnel_state_{window_hours}",
-        "update",
-    )
-    # stage is monotone per user; the final update is the max
-    final = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("stage").alias("stage"))
-    )
-    got = {
-        r.stage: r.n
-        for r in final.groupBy("stage")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    got_cum = {
-        k: sum(v for s, v in got.items() if s >= k) for k in (1, 2, 3)
-    }
-    want = {
-        r.stage_ord: r.n_users
-        for r in funnel_conversion(
-            batch, window_hours=window_hours
-        ).collect()
-    }
-    assert got_cum == want, (got_cum, want)
