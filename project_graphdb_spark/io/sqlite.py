@@ -11,10 +11,12 @@ Spark-first:
   :class:`RelationalSchema` IR (reference: final/erd_text.py:27-47).
 * **Table scan (A2)** — rows via stdlib ``sqlite3`` into an Arrow table
   whose schema is derived from the *declared* column types, then
-  ``spark.createDataFrame``. SQLite is a single local file, so this scan
-  is inherently driver-side — exactly why the reference (and we) stage
-  to a distributed-readable format immediately; executors only ever read
-  the staged files.
+  ``spark.createDataFrame``, its partitions sized by the table's Arrow
+  bytes through ``spark.sql.files.maxPartitionBytes`` (one partition per
+  split, as for a file of that size). SQLite is a single local file, so
+  this scan is inherently driver-side — exactly why the reference (and
+  we) stage to a distributed-readable format immediately; executors only
+  ever read the staged files.
 * **Typed staging sink/scan (A4/A5)** — per-table Parquet (preferred) or
   header CSV with explicit read schemas, after the affinity-cast +
   timestamp-explode normalization pass (B8/B9,
@@ -33,7 +35,9 @@ distributed scans.
 
 from __future__ import annotations
 
+import math
 import os
+import re
 import sqlite3
 
 import pyarrow as pa
@@ -106,10 +110,8 @@ def introspect(db_path: str) -> RelationalSchema:
     return RelationalSchema(tables=tables)
 
 
-def read_table(
-    spark: SparkSession, db_path: str, table: TableInfo
-) -> DataFrame:
-    """A2: one table → Spark DataFrame, typed by declared-type affinity.
+def read_arrow(db_path: str, table: TableInfo) -> pa.Table:
+    """A2: one table → Arrow table, typed by declared-type affinity.
 
     Values that violate their declared affinity (SQLite stores anything
     anywhere) surface as strings here and become NULL in
@@ -139,11 +141,36 @@ def read_table(
             )
         arrays.append(arr)
         fields.append(pa.field(cname, arr.type))
-    atable = pa.table(arrays, schema=pa.schema(fields))
-    try:
-        return spark.createDataFrame(atable)
-    except TypeError:  # older createDataFrame without Arrow-table support
-        return spark.createDataFrame(atable.to_pandas())
+    return pa.table(arrays, schema=pa.schema(fields))
+
+
+def read_table(
+    spark: SparkSession, db_path: str, table: TableInfo
+) -> DataFrame:
+    """A2: :func:`read_arrow` as a DataFrame, split by its bytes the way
+    Spark splits a file of the same size
+    (``spark.sql.files.maxPartitionBytes``). A local relation otherwise
+    scans in min(rows, parallelism) slices, so a 5-row table would save
+    as 4 parquet files; ``coalesce`` never adds partitions."""
+    atable = read_arrow(db_path, table)
+    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+    return spark.createDataFrame(atable).coalesce(
+        max(1, math.ceil(atable.nbytes / max_bytes))
+    )
+
+
+_BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2,
+               "g": 3, "gb": 3, "t": 4, "tb": 4, "p": 5, "pb": 5}
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size conf in Spark's notation (``'134217728b'``,
+    ``'128m'``; no suffix means bytes) as an int. Spark rejects any
+    other form when the conf is set."""
+    num, unit = re.fullmatch(
+        r"(\d+)([a-z]*)", spark.conf.get(key).strip().lower()
+    ).groups()
+    return int(num) << (10 * _BYTE_UNITS[unit])
 
 
 def read_normalized(

@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from project_graphdb_spark.graph.builder import build_graph, tpch_graph
+from project_graphdb_spark.graph.property_graph import EdgeFrame, PropertyGraph
+from project_graphdb_spark.graph.storage import load_graph, save_graph
 from project_graphdb_spark.schema.inference import (
     TPCH_REL_NAMES,
     infer_graph_schema,
@@ -118,16 +123,28 @@ def test_schema_describe(spark):
 
 def test_graph_save_load_roundtrip(spark, sf_dir, tmp_path):
     from project_graphdb_spark.cypher.compiler import compile_cypher
-    from project_graphdb_spark.graph.builder import tpch_graph
-    from project_graphdb_spark.graph.storage import load_graph, save_graph
 
     g = tpch_graph(spark, sf_dir)
     path = str(tmp_path / "graph")
     save_graph(g, path)
-    g2 = load_graph(spark, path)
+    sc = spark.sparkContext
+    group = "load_graph_declared_schemas"
+    sc.setJobGroup(group, group)
+    try:
+        g2 = load_graph(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the manifest's schemas replace per-directory inference jobs
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
     assert set(g2.nodes) == set(g.nodes)
     assert set(g2.edges) == set(g.edges)
+    frames = [("nodes", k, df) for k, df in g2.nodes.items()] + [
+        ("edges", k, ef.df) for k, ef in g2.edges.items()
+    ]
+    for kind, name, df in frames:
+        inferred = spark.read.parquet(os.path.join(path, kind, name)).schema
+        assert df.schema == inferred, (kind, name)
     for label in g.nodes:
         assert g2.nodes[label].count() == g.nodes[label].count()
     # the loaded graph serves the same compiled Cypher
@@ -179,3 +196,56 @@ def test_register_views_sql_over_graph(spark, sf_dir):
         "JOIN g_node_Customer c ON e.dst = c.c_custkey"
     ).collect()[0]["n"]
     assert n == g.edge("PLACED_BY").count()
+
+
+def test_failed_resave_leaves_no_manifest(spark, sf_dir, tmp_path):
+    """A re-save that fails part-way has already overwritten some frame
+    directories, so the old manifest must not survive next to them."""
+    g = tpch_graph(spark, sf_dir)
+    path = str(tmp_path / "graph")
+    save_graph(g, path)
+    # the last frame written raises on its first row
+    rel_type, ef = list(g.edges.items())[-1]
+    col = ef.df.columns[0]
+    failing = ef.df.withColumn(
+        col,
+        F.raise_error(F.lit("injected write failure")).cast(
+            ef.df.schema[col].dataType
+        ),
+    )
+    broken = PropertyGraph(
+        schema=g.schema,
+        nodes=g.nodes,
+        edges={**g.edges, rel_type: EdgeFrame(meta=ef.meta, df=failing)},
+    )
+    with pytest.raises(Exception, match="injected write failure"):
+        save_graph(broken, path)
+
+    assert not os.path.exists(os.path.join(path, "graph_schema.json"))
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    with pytest.raises(FileNotFoundError):
+        load_graph(spark, path)
+
+
+def test_saved_schema_matches_parquet_read_for_nested_columns(spark, tmp_path):
+    """Non-null nested fields, elements and values come back nullable
+    from a parquet read, declared or inferred."""
+    from project_graphdb_spark.schema.graph_schema import GraphSchema, NodeDef
+
+    df = spark.sql(
+        "SELECT id, array(id) AS arr, named_struct('x', id) AS st, "
+        "map(id, array(id)) AS mp FROM range(3)"
+    )
+    g = PropertyGraph(
+        schema=GraphSchema(
+            nodes=[NodeDef("T", "id", ["arr", "st", "mp"])], relationships=[]
+        ),
+        nodes={"T": df},
+        edges={},
+    )
+    path = str(tmp_path / "graph")
+    save_graph(g, path)
+    loaded = load_graph(spark, path).nodes["T"]
+    inferred = spark.read.parquet(os.path.join(path, "nodes", "T")).schema
+    assert loaded.schema == inferred
+    assert sorted(map(tuple, loaded.collect())) == sorted(map(tuple, df.collect()))

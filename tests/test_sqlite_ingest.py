@@ -4,6 +4,7 @@ roundtrip, and the end-to-end sqlite → PropertyGraph pipeline."""
 
 from __future__ import annotations
 
+import math
 import sqlite3
 
 import pytest
@@ -12,6 +13,7 @@ from project_graphdb_spark.io.sqlite import (
     export_sqlite,
     introspect,
     list_tables,
+    read_arrow,
     read_normalized,
     read_staged_csv,
     read_table,
@@ -161,6 +163,54 @@ def test_sqlite_to_graph_end_to_end(spark, db_path):
     assert graph.edges["HAS_STORE"].df.count() == 2
     # stock has one exact-dup row -> MERGE dedup keeps 3 (C16/B4)
     assert graph.edges["PRODUCT_STORE"].df.count() == 3
+
+
+def test_sqlite_tables_scan_as_one_partition(spark, db_path, tmp_path):
+    """Tables far below ``spark.sql.files.maxPartitionBytes`` scan as one
+    partition, so every saved graph frame is one parquet file."""
+    from project_graphdb_spark.graph.storage import save_graph
+
+    graph, _, rschema = sqlite_to_graph(spark, db_path)
+    for t in rschema:
+        assert read_table(spark, db_path, t).rdd.getNumPartitions() == 1
+    out = tmp_path / "graph"
+    save_graph(graph, str(out))
+    frame_dirs = [*(out / "nodes").iterdir(), *(out / "edges").iterdir()]
+    assert len(frame_dirs) == len(graph.nodes) + len(graph.edges)
+    for d in frame_dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d
+
+
+def test_read_table_partitions_follow_max_partition_bytes(spark, db_path):
+    key = "spark.sql.files.maxPartitionBytes"
+    table, atable = max(
+        ((t, read_arrow(db_path, t)) for t in introspect(db_path)),
+        key=lambda pair: pair[1].nbytes,
+    )
+    nbytes = atable.nbytes
+    limit = math.ceil(nbytes / 2)
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(limit))
+    try:
+        df = read_table(spark, db_path, table)
+        assert df.rdd.getNumPartitions() == math.ceil(nbytes / limit) == 2
+        assert df.count() == atable.num_rows
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_conf_bytes_reads_spark_byte_notation(spark):
+    from project_graphdb_spark.io.sqlite import _conf_bytes
+
+    key = "spark.sql.files.maxPartitionBytes"
+    assert _conf_bytes(spark, key) == 128 * 1024 * 1024  # '134217728b'
+    before = spark.conf.get(key)
+    try:
+        for raw, want in (("4096", 4096), ("64m", 64 << 20), ("1G", 1 << 30)):
+            spark.conf.set(key, raw)
+            assert _conf_bytes(spark, key) == want, raw
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_viz_renderers(db_path):

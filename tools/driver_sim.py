@@ -30,8 +30,10 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from pyspark.sql import SparkSession
 
+    from project_graphdb_spark.session import local_cpus
+
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .appName("driver-sim")
         .getOrCreate()
     )
