@@ -11,12 +11,13 @@ Spark-first:
   :class:`RelationalSchema` IR (reference: final/erd_text.py:27-47).
 * **Table scan (A2)** — rows via stdlib ``sqlite3`` into an Arrow table
   whose schema is derived from the *declared* column types, then
-  ``spark.createDataFrame``, its partitions sized by the table's Arrow
-  bytes through ``spark.sql.files.maxPartitionBytes`` (one partition per
-  split, as for a file of that size). SQLite is a single local file, so
-  this scan is inherently driver-side — exactly why the reference (and
-  we) stage to a distributed-readable format immediately; executors only
-  ever read the staged files.
+  ``spark.createDataFrame``, in as many partitions as Spark would split
+  a file of the table's Arrow bytes into (``maxPartitionBytes``,
+  ``openCostInBytes`` and the default parallelism): one partition for a
+  table under the open cost, more for a larger one. SQLite is a single
+  local file, so this scan is inherently driver-side — exactly why the
+  reference (and we) stage to a distributed-readable format immediately;
+  executors only ever read the staged files.
 * **Typed staging sink/scan (A4/A5)** — per-table Parquet (preferred) or
   header CSV with explicit read schemas, after the affinity-cast +
   timestamp-explode normalization pass (B8/B9,
@@ -147,16 +148,35 @@ def read_arrow(db_path: str, table: TableInfo) -> pa.Table:
 def read_table(
     spark: SparkSession, db_path: str, table: TableInfo
 ) -> DataFrame:
-    """A2: :func:`read_arrow` as a DataFrame, split by its bytes the way
-    Spark splits a file of the same size
-    (``spark.sql.files.maxPartitionBytes``). A local relation otherwise
-    scans in min(rows, parallelism) slices, so a 5-row table would save
-    as 4 parquet files; ``coalesce`` never adds partitions."""
+    """A2: :func:`read_arrow` as a DataFrame, in as many partitions as
+    Spark would split a file of the table's Arrow bytes into
+    (:func:`split_count`). A local relation otherwise scans in
+    min(rows, parallelism) slices, so a 5-row table would save as 4
+    parquet files; ``coalesce`` never adds partitions, so a table big
+    enough to fill the cores keeps that split."""
     atable = read_arrow(db_path, table)
-    max_bytes = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
     return spark.createDataFrame(atable).coalesce(
-        max(1, math.ceil(atable.nbytes / max_bytes))
+        split_count(
+            atable.nbytes,
+            _conf_bytes(spark, "spark.sql.files.maxPartitionBytes"),
+            _conf_bytes(spark, "spark.sql.files.openCostInBytes"),
+            spark.sparkContext.defaultParallelism,
+        )
     )
+
+
+def split_count(
+    nbytes: int, max_partition_bytes: int, open_cost: int, parallelism: int
+) -> int:
+    """Partitions Spark's file scan gives one splittable file of
+    ``nbytes`` (``FilePartition.maxSplitBytes``): the split size is the
+    file's bytes per core, no less than the open cost and no more than
+    ``maxPartitionBytes``. A table under the open cost is one partition;
+    a 90 MB one on 32 cores is 23; one over ``maxPartitionBytes`` × cores
+    is one partition per ``maxPartitionBytes``."""
+    per_core = (nbytes + open_cost) // parallelism
+    split = min(max_partition_bytes, max(open_cost, per_core, 1))
+    return max(1, math.ceil(nbytes / split))
 
 
 _BYTE_UNITS = {"": 0, "b": 0, "k": 1, "kb": 1, "m": 2, "mb": 2,

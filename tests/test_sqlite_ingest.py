@@ -17,6 +17,7 @@ from project_graphdb_spark.io.sqlite import (
     read_normalized,
     read_staged_csv,
     read_table,
+    split_count,
     sqlite_to_graph,
 )
 from project_graphdb_spark.schema.inference import infer_graph_schema
@@ -188,7 +189,7 @@ def test_read_table_partitions_follow_max_partition_bytes(spark, db_path):
         key=lambda pair: pair[1].nbytes,
     )
     nbytes = atable.nbytes
-    limit = math.ceil(nbytes / 2)
+    limit = math.ceil(nbytes / 2)  # below the 4 MB open cost
     before = spark.conf.get(key)
     spark.conf.set(key, str(limit))
     try:
@@ -197,6 +198,41 @@ def test_read_table_partitions_follow_max_partition_bytes(spark, db_path):
         assert df.count() == atable.num_rows
     finally:
         spark.conf.set(key, before)
+
+
+def test_read_table_keeps_split_of_table_that_fills_cores(spark, db_path):
+    """Once a table's bytes per core pass the open cost, the scan keeps
+    the local relation's own split: the byte rule only ever merges."""
+    key = "spark.sql.files.openCostInBytes"
+    table, atable = max(
+        ((t, read_arrow(db_path, t)) for t in introspect(db_path)),
+        key=lambda pair: pair[1].num_rows,
+    )
+    local = spark.createDataFrame(atable).rdd.getNumPartitions()
+    assert local > 1
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        df = read_table(spark, db_path, table)
+        assert df.rdd.getNumPartitions() == local
+        assert df.count() == atable.num_rows
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_split_count_follows_spark_file_split():
+    mb = 1 << 20
+    # Spark's defaults: 128 MB maxPartitionBytes, 4 MB openCostInBytes
+    assert split_count(94, 128 * mb, 4 * mb, 32) == 1
+    assert split_count(0, 128 * mb, 4 * mb, 32) == 1
+    # sf1 and sf10 TPC-H customer in Arrow bytes: split at the open cost
+    # on 32 cores, at bytes per core on 4
+    assert split_count(8_849_825, 128 * mb, 4 * mb, 32) == 3
+    assert split_count(88_498_801, 128 * mb, 4 * mb, 32) == 22
+    assert split_count(88_498_801, 128 * mb, 4 * mb, 4) == 4
+    # past maxPartitionBytes x cores, one partition per maxPartitionBytes
+    assert split_count(10 << 30, 128 * mb, 4 * mb, 4) == 80
+    assert split_count(0, 128 * mb, 0, 4) == 1  # no zero split size
 
 
 def test_conf_bytes_reads_spark_byte_notation(spark):
