@@ -19,8 +19,9 @@ final/langraph_neo4j3.py:508-552):
 * **correct_cypher** (ref :393-451): planner repairs from the error
   list; we add a bounded retry count (the reference relies on LLM
   convergence).
-* **execute_cypher** (ref :453-465): compile to a DataFrame, collect
-  records; empty → sentinel string.
+* **execute_cypher** (ref :453-465): collect the DataFrame that
+  validation compiled — each statement compiles once, as the reference
+  runs the statement its EXPLAIN checked; empty → sentinel string.
 * **generate_final_answer** (ref :467-503): deterministic record
   formatting by default, LLM synthesis pluggable.
 """
@@ -314,7 +315,7 @@ def run_agent_workflow(
                 steps.append("correct_direction")
             # (a') analyze against the catalog
             try:
-                compile_cypher(graph, parsed)
+                df = compile_cypher(graph, parsed)
                 state["cypher_errors"] = []
             except CypherAnalysisError as e:
                 state["cypher_errors"] = e.errors
@@ -350,7 +351,6 @@ def run_agent_workflow(
 
     # execute_cypher
     steps.append("execute_cypher")
-    df = compile_cypher(graph, parsed)
     records = [row.asDict() for row in df.collect()]
     state["database_records"] = records if records else NO_RESULTS_SENTINEL
 

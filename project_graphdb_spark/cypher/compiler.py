@@ -31,6 +31,7 @@ import copy
 import dataclasses
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -43,6 +44,7 @@ from project_graphdb_spark.graph.property_graph import (
     PropertyGraph,
     unified_id,
 )
+from project_graphdb_spark.spark_util import memoized_measure
 
 
 class CypherAnalysisError(ValueError):
@@ -438,10 +440,7 @@ class _ExprCompiler:
     def _maybe_dec(self, col: Column, var: str, name: str) -> Column:
         """Inside an exact sum(), cast double-typed property columns to
         decimal so the aggregate is order-independent."""
-        try:
-            dtype = dict(self.scope.df.dtypes).get(f"{var}__{name}")
-        except Exception:
-            dtype = None
+        dtype = dict(self.scope.df.dtypes).get(f"{var}__{name}")
         if dtype in ("double", "float"):
             return col.cast(_DEC)
         return col
@@ -451,12 +450,7 @@ class _ExprCompiler:
         (a directly bound integral property or an int literal) —
         conservative: anything else is treated as non-integral."""
         if isinstance(e, A.Prop) and isinstance(e.base, str):
-            try:
-                dtype = dict(self.scope.df.dtypes).get(
-                    f"{e.base}__{e.name}"
-                )
-            except Exception:
-                return False
+            dtype = dict(self.scope.df.dtypes).get(f"{e.base}__{e.name}")
             return dtype in ("tinyint", "smallint", "int", "bigint")
         if isinstance(e, A.Lit):
             return isinstance(e.value, int) and not isinstance(
@@ -506,20 +500,20 @@ class _ExprCompiler:
         if name == "size" and len(e.args) == 1:
             # size(): element count on lists/maps, character count on
             # strings. The argument's type is resolved against the
-            # current frame's schema (driver-side analysis only); when
-            # unresolvable (e.g. inside a lambda), string semantics
-            # apply, matching CYPHER.md's documented default.
+            # current frame's schema (driver-side analysis only).
             arg_col = self.compile(e.args[0])
-            dt = None
             try:
                 dt = (
                     self.scope.df.select(arg_col.alias("__t"))
                     .schema[0]
                     .dataType.simpleString()
                 )
-            except Exception:
-                pass
-            if dt is not None and dt.startswith(("array", "map")):
+            except AnalysisException:
+                # a list-comprehension variable is a lambda variable,
+                # which no frame resolves; string semantics apply, the
+                # documented default (CYPHER.md)
+                dt = "string"
+            if dt.startswith(("array", "map")):
                 return F.size(arg_col)
             return F.length(arg_col)
         if name in ("id", "elementid", "keys", "properties"):
@@ -801,9 +795,10 @@ def _bind_patterns(
                 ef.select(node_def.key, *new_cols), node_def.key, "inner"
             )
             cols.extend(new_cols)
-        renamed = frame.select(
-            *[F.col(c).alias(f"{var}__{c}") for c in cols]
-        )
+        if extras:
+            # the key join moved the key column first
+            frame = frame.select(*cols)
+        renamed = frame.toDF(*[f"{var}__{c}" for c in cols])
         vars[var] = _BoundVar(
             "node",
             label,
@@ -849,9 +844,8 @@ def _bind_patterns(
             bv.applied_labels.add(l)
             ef = graph.nodes[l]
             new_cols = [c for c in ef.columns if c not in bv.columns]
-            sel = ef.select(
-                F.col(key).alias(f"__cj__{key}"),
-                *[F.col(c).alias(f"{v}__{c}") for c in new_cols],
+            sel = ef.select(key, *new_cols).toDF(
+                f"__cj__{key}", *[f"{v}__{c}" for c in new_cols]
             )
             df = df.join(
                 sel,
@@ -1277,8 +1271,8 @@ def _bind_patterns(
                     *[c for c in eframe.columns if c not in ("src", "dst")],
                 )
                 eframe = eframe.unionByName(swapped)
-            renamed = eframe.select(
-                *[F.col(c).alias(f"{edge_var}__{c}") for c in eframe.columns]
+            renamed = eframe.toDF(
+                *[f"{edge_var}__{c}" for c in eframe.columns]
             )
             vars[edge_var] = _BoundVar(
                 "edge", edge_pat.rel_type, meta.properties
@@ -1449,9 +1443,8 @@ def _attach_shortest_path(
                 continue
             nf = nf.filter(F.col(prop) == F.lit(expr.value))
         uid = f"{var}__uid"
-        out = nf.select(
-            *[F.col(c).alias(f"{var}__{c}") for c in nf.columns],
-            unified_id(label, F.col(node_def.key)).alias(uid),
+        out = nf.toDF(*[f"{var}__{c}" for c in nf.columns]).withColumn(
+            uid, unified_id(label, F.col(f"{var}__{node_def.key}"))
         )
         return var, label, out, uid
 
@@ -1994,9 +1987,7 @@ def _attach_optional(
         for c in odf.columns
         if c.startswith(f"{v}__")
     }
-    odf = odf.select(
-        *[F.col(c).alias(rename.get(c, c)) for c in odf.columns]
-    )
+    odf = odf.toDF(*[rename.get(c, c) for c in odf.columns])
     cond = None
     for v in shared:
         key = vars[v].key
@@ -2027,30 +2018,19 @@ AGG_PUSHDOWN_ENABLED = True
 # the nearest measured loss.
 AGG_PUSHDOWN_MIN_FANIN = 16.0
 
-# (session JVM hash, edge-frame semanticHash, key) -> measured fan-in;
-# one narrow count+approx_count_distinct job per edge frame per
-# session, the adaptive_broadcast memo pattern
-_FANIN_MEMO: dict[tuple[int, int, str], float] = {}
-
 
 def _edge_fanin(eframe: DataFrame, key: str) -> float:
-    """Measured edge rows per distinct key (memoized per session)."""
-    memo_key = (
-        eframe.sparkSession._jsparkSession.hashCode(),
-        eframe._jdf.queryExecution().analyzed().semanticHash(),
-        key,
-    )
-    ratio = _FANIN_MEMO.get(memo_key)
-    if ratio is None:
-        row = eframe.agg(
+    """Measured edge rows per distinct key: one narrow
+    count+approx_count_distinct job per edge frame per session."""
+
+    def measure(df: DataFrame) -> float:
+        row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.approx_count_distinct(key).alias("k"),
         ).head()
-        ratio = float(row["n"]) / max(float(row["k"]), 1.0)
-        if len(_FANIN_MEMO) > 512:
-            _FANIN_MEMO.clear()
-        _FANIN_MEMO[memo_key] = ratio
-    return ratio
+        return float(row["n"]) / max(float(row["k"]), 1.0)
+
+    return memoized_measure(eframe, f"fanin:{key}", measure)
 
 
 _PUSHABLE_AGGS = frozenset({"sum", "count", "min", "max"})
@@ -2225,9 +2205,7 @@ def _try_agg_pushdown(
     # and let the generic join-first path run
     if _edge_fanin(eframe, gkey) < AGG_PUSHDOWN_MIN_FANIN:
         return None
-    renamed = eframe.select(
-        *[F.col(c).alias(f"{evar}__{c}") for c in eframe.columns]
-    )
+    renamed = eframe.toDF(*[f"{evar}__{c}" for c in eframe.columns])
     escope = _Scope(
         {evar: _BoundVar("edge", edge.rel_type, meta.properties)},
         None,
@@ -2270,9 +2248,7 @@ def _try_agg_pushdown(
     node_def = graph.schema.node(glabel)
     nframe = graph.nodes[glabel]
     ncols = list(nframe.columns)
-    nrenamed = nframe.select(
-        *[F.col(c).alias(f"{gvar}__{c}") for c in ncols]
-    )
+    nrenamed = nframe.toDF(*[f"{gvar}__{c}" for c in ncols])
     out = grouped.join(
         nrenamed,
         F.col(f"{evar}__{gkey}") == F.col(f"{gvar}__{node_def.key}"),

@@ -167,11 +167,11 @@ def repartition_for_cpu(df, *cols):
     return df.repartition(n, *cols)
 
 
-# measured-count memo for adaptive_broadcast, keyed by (session id,
-# analyzed-plan semantic hash). Bounded: cleared wholesale past 512
-# entries (slices are a handful per query; this never fires in
+# measured values (row counts, edge fan-ins), keyed by (what was
+# measured, session id, analyzed-plan semantic hash). Bounded: cleared
+# wholesale past 512 entries (a handful per query; this never fires in
 # practice, it only caps a pathological registry-wide sweep).
-_BCAST_COUNT_MEMO: dict[tuple[int, int], int] = {}
+_MEASURED_MEMO: dict[tuple[str, int, int], object] = {}
 
 
 def _est_row_bytes(schema) -> int:
@@ -242,25 +242,28 @@ def adaptive_broadcast(
     return df
 
 
-def memoized_count(df) -> int:
-    """``df.count()`` memoized per (session, analyzed-plan semantic
-    hash) — the measurement primitive behind ``adaptive_broadcast``,
-    exposed for any builder that needs a guard count without paying
-    one job per rebuild: one narrow count job per distinct slice per
-    session."""
+def memoized_measure(df, what: str, measure):
+    """``measure(df)`` memoized per (what, session, analyzed-plan
+    semantic hash): one measuring job per distinct frame per session,
+    however often a builder or compiler rebuilds the same plan."""
     # session key = JVM identity hash (a py4j proxy's Python id() is
     # NOT stable across attribute accesses)
     key = (
+        what,
         df.sparkSession._jsparkSession.hashCode(),
         df._jdf.queryExecution().analyzed().semanticHash(),
     )
-    n = _BCAST_COUNT_MEMO.get(key)
-    if n is None:
-        n = df.count()
-        if len(_BCAST_COUNT_MEMO) > 512:
-            _BCAST_COUNT_MEMO.clear()
-        _BCAST_COUNT_MEMO[key] = n
-    return n
+    if key not in _MEASURED_MEMO:
+        if len(_MEASURED_MEMO) > 512:
+            _MEASURED_MEMO.clear()
+        _MEASURED_MEMO[key] = measure(df)
+    return _MEASURED_MEMO[key]
+
+
+def memoized_count(df) -> int:
+    """``df.count()`` memoized per session and plan — the measurement
+    primitive behind ``adaptive_broadcast``."""
+    return memoized_measure(df, "count", lambda d: d.count())
 
 
 def classify_bnlj(df) -> dict:

@@ -283,3 +283,96 @@ def test_repair_property_typos_unit():
     # unrepairable errors leave the statement alone
     same = repair_property_typos("RETURN 1", ["syntax: boom"], schema)
     assert same == "RETURN 1"
+
+
+@pytest.fixture
+def compiles(monkeypatch):
+    """Every compile_cypher call of the workflow, as "valid" or
+    "invalid" (raised an analysis error)."""
+    from project_graphdb_spark.agent import workflow
+
+    calls: list[str] = []
+    real = workflow.compile_cypher
+
+    def counting(graph, query, *args, **kwargs):
+        try:
+            df = real(graph, query, *args, **kwargs)
+        except workflow.CypherAnalysisError:
+            calls.append("invalid")
+            raise
+        calls.append("valid")
+        return df
+
+    monkeypatch.setattr(workflow, "compile_cypher", counting)
+    return calls
+
+
+_TEMPLATE_QUESTIONS = [
+    "total sales for year 1995",
+    "order status counts for year 1995",
+    "top 4 customers by revenue",
+    "how many customers in the 'building' segment",
+    "number of orders by segment",
+    "how many customers have no orders?",
+    "what is the total revenue per year?",
+]
+
+
+@pytest.mark.parametrize("question", _TEMPLATE_QUESTIONS)
+def test_template_question_compiles_once(graph, compiles, question):
+    """Validation's frame is the one executed: a valid question
+    compiles exactly once, and its records are those of a fresh
+    compile of the direction-corrected statement."""
+    from project_graphdb_spark.cypher import (
+        compile_cypher,
+        correct_directions,
+        parse,
+    )
+
+    state = run_agent_workflow(new_state(question), graph)
+    assert compiles == ["valid"]
+    direction = ["correct_direction"] if "top" in question else []
+    assert state["steps"] == [
+        "generate_cypher", "validate_cypher", *direction,
+        "execute_cypher", "generate_final_answer",
+    ]
+    q = parse(state["cypher_statement"])
+    correct_directions(graph, q)
+    want = [r.asDict() for r in compile_cypher(graph, q).collect()]
+    assert state["database_records"] == (want or NO_RESULTS_SENTINEL)
+
+
+def test_faulty_question_compiles_invalid_then_corrected(graph, compiles):
+    """BROKEN_TOP5 fails analysis once, is repaired, and the repaired
+    statement's single compile is the frame that executes."""
+    from project_graphdb_spark.agent.workflow import FaultyPlanner
+    from project_graphdb_spark.operators.agent_workload import BROKEN_TOP5
+
+    state = run_agent_workflow(
+        new_state("top 5 customers by revenue"), graph,
+        FaultyPlanner(BROKEN_TOP5),
+    )
+    assert compiles == ["invalid", "valid"]
+    assert state["steps"] == [
+        "generate_cypher", "validate_cypher", "correct_direction",
+        "correct_cypher", "validate_cypher", "correct_direction",
+        "execute_cypher", "generate_final_answer",
+    ]
+    assert len(state["database_records"]) == 5
+
+
+def test_missing_value_question_compiles_once_and_never_executes(
+    graph, compiles
+):
+    state = run_agent_workflow(
+        new_state("how many customers in the 'aerospace' segment"), graph
+    )
+    assert compiles == ["valid"]
+    assert state["steps"] == [
+        "generate_cypher", "validate_cypher", "generate_final_answer",
+    ]
+    assert state["database_records"] == []
+    assert state["answer"] == (
+        "The value 'aerospace' does not exist in the database for "
+        "c.c_mktsegment."
+    )

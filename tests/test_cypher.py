@@ -1725,6 +1725,24 @@ def test_comprehension_over_collected_column(spark, sf_dir):
     assert row["n"] == n_nations and row["with_a"] == exp_a
 
 
+def test_size_of_string_list_and_comprehension_variable(spark, sf_dir):
+    """size() types its argument from the frame: characters of a string
+    property, elements of a list, and characters of a list-comprehension
+    variable over strings, a lambda variable no frame resolves, for which
+    the string default holds."""
+    g = tpch_graph(spark, sf_dir)
+    row = compile_cypher(
+        g,
+        "MATCH (c:Customer) WHERE c.c_custkey = 1 "
+        "RETURN size(c.c_name) AS name_len, "
+        "size(split(c.c_name, '#')) AS n_parts, "
+        "[x IN split(c.c_name, '#') | size(x)] AS part_lens",
+    ).collect()[0]
+    assert row["name_len"] == len("Customer#000000001")
+    assert row["n_parts"] == 2
+    assert list(row["part_lens"]) == [len("Customer"), len("000000001")]
+
+
 def test_return_star(spark, sf_dir):
     g = tpch_graph(spark, sf_dir)
     df = compile_cypher(g, "MATCH (r:Region) RETURN * ORDER BY r")

@@ -411,22 +411,48 @@ def test_adaptive_broadcast_memoizes_measured_count(spark, sf_dir):
     region = load_table(spark, sf_dir, "region").select("r_regionkey")
     adaptive_broadcast(region)
     key = (
+        "count",
         region.sparkSession._jsparkSession.hashCode(),
         region._jdf.queryExecution().analyzed().semanticHash(),
     )
-    assert key in spark_util._BCAST_COUNT_MEMO
+    assert key in spark_util._MEASURED_MEMO
     # poison the memoized count; a rebuild of the SAME query must use
     # it (refusing the broadcast) instead of re-counting
-    saved = spark_util._BCAST_COUNT_MEMO[key]
+    saved = spark_util._MEASURED_MEMO[key]
     try:
-        spark_util._BCAST_COUNT_MEMO[key] = 10**12
+        spark_util._MEASURED_MEMO[key] = 10**12
         region2 = load_table(spark, sf_dir, "region").select("r_regionkey")
         out = adaptive_broadcast(region2)
         plan = out._jdf.queryExecution().logical().toString()
         assert "Hint" not in plan, "memo ignored: fresh count broadcast"
-        assert spark_util._BCAST_COUNT_MEMO[key] == 10**12
+        assert spark_util._MEASURED_MEMO[key] == 10**12
     finally:
-        spark_util._BCAST_COUNT_MEMO[key] = saved
+        spark_util._MEASURED_MEMO[key] = saved
+
+
+def test_agg_pushdown_fanin_is_measured_once_per_session(spark, sf_dir):
+    """The aggregation-pushdown gate measures an edge frame's fan-in
+    with a Spark job; compiling the same query again reuses the memoized
+    measurement and starts no job at all."""
+    from project_graphdb_spark import spark_util
+    from project_graphdb_spark.cypher.compiler import compile_cypher
+    from project_graphdb_spark.graph.builder import tpch_graph
+
+    g = tpch_graph(spark, sf_dir)
+    q = (
+        "MATCH (o:Orders)-[ci:CONTAINS_ITEM]->(p:Part) "
+        "RETURN p.p_brand AS brand, count(*) AS n ORDER BY brand"
+    )
+    compile_cypher(g, q)
+    assert any(k[0] == "fanin:dst" for k in spark_util._MEASURED_MEMO)
+    sc = spark.sparkContext
+    group = "agg_pushdown_second_compile"
+    sc.setJobGroup(group, group)
+    try:
+        compile_cypher(g, q)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_q15_reuses_revenue_exchange(spark, sf_dir):

@@ -232,6 +232,9 @@ def sweep(spark, sf_dir: str, out_json: str | None) -> None:
     if skipped:
         names = [n for n in names if n not in skipped]
         print(f"SKIPPED (explicit): {skipped}")
+    # the candidate telemetry below stands in for the blocked query when
+    # a large SF auto-skips it, so it follows the selection made here
+    blocked_selected = "embedding_near_dup_blocked" in names
     # only pay the corpus count when a BIG_SF_EXCLUDED query is
     # actually selected (ADVICE r8: an unconditional count here was an
     # extra corpus pass before every timed loop, --only runs included)
@@ -280,27 +283,31 @@ def sweep(spark, sf_dir: str, out_json: str | None) -> None:
     # candidate-volume telemetry for the blocked embedding dedup path:
     # measured vs predicted (P^2 * n^2 / k) pair counts, so SCALE.md can
     # track whether the sub-quadratic envelope holds as data grows.
+    # Only a sweep that selected embedding_near_dup_blocked pays for it.
     # Past ~100k vectors an exact second candidate generation would
     # double a multi-minute job, so switch to the 1/16 hash-sampled
     # estimate (unbiased; cost ~1/16 of the full join).
     # A telemetry failure must not lose the sweep above (r10: a
     # heap-marginal candidate count OOMed AFTER 48 measured queries and
     # took the whole payload with it) — record the error and move on.
-    try:
-        from project_graphdb_spark.operators.similarity import (
-            _emb,
-            blocked_candidate_stats,
-        )
+    if not blocked_selected:
+        cand_stats = {"skipped": "embedding_near_dup_blocked not selected"}
+    else:
+        try:
+            from project_graphdb_spark.operators.similarity import (
+                _emb,
+                blocked_candidate_stats,
+            )
 
-        n_emb = _emb(spark, sf_dir).count()
-        cand_mod = 16 if n_emb > 100_000 else None
-        cand_stats = blocked_candidate_stats(
-            spark, sf_dir, sample_mod=cand_mod
-        )
-        print("blocked_candidate_stats:", json.dumps(cand_stats))
-    except Exception as e:  # noqa: BLE001 — recorded, not swallowed
-        cand_stats = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
-        print("blocked_candidate_stats FAILED:", cand_stats["error"])
+            n_emb = _emb(spark, sf_dir).count()
+            cand_mod = 16 if n_emb > 100_000 else None
+            cand_stats = blocked_candidate_stats(
+                spark, sf_dir, sample_mod=cand_mod
+            )
+            print("blocked_candidate_stats:", json.dumps(cand_stats))
+        except Exception as e:  # noqa: BLE001 — recorded, not swallowed
+            cand_stats = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
+            print("blocked_candidate_stats FAILED:", cand_stats["error"])
 
     payload = {
         "sf_dir": sf_dir,
